@@ -263,30 +263,34 @@ object Bench {
     // into parsed:null. Shapes therefore attach for the SLOWEST queries
     // first — outlier adjudication reads the expensive entries, q91's
     // 8.73 s case exactly — until the projected line reaches a 1900-char
-    // budget; "shape_omitted" says how many didn't fit. The complete
-    // per-run shape record stays in the evidence sidecar as before.
+    // budget; "shape_omitted" says how many didn't fit, "shape_failed"
+    // how many queries had no successful run to take a shape from (they
+    // are named in "failed" too). The complete per-run shape record
+    // stays in the evidence sidecar as before.
     val lineBudget = 1900
     def line(shapesJson: String): String =
       f"""{"metric":"total","value":${r3(total)},"unit":"sec","qunit":"ms","method":"noop-median$runs-warm","nq":${results.size}$omittedJson,"load_max":$loadMax%.2f,"load_base":$loadBase%.2f,"queries":$qs$failedJson$shapesJson,"sf":"$sfDir"}"""
     val shapesJson = locally {
-      // Budget accounting includes the envelope (`,"shapes":{...}` plus a
-      // worst-case `,"shape_omitted":NNN`) so the assembled line can never
-      // overshoot even when every query's shape fits.
-      var remaining = lineBudget - line(""","shapes":{},"shape_omitted":999""").length
+      // Budget accounting includes the envelope (`,"shapes":{...}` plus
+      // both counts at their largest possible value, the registry size)
+      // so the assembled line can never overshoot even when every
+      // query's shape fits.
+      val n = results.size
+      var remaining =
+        lineBudget - line(s""","shapes":{},"shape_omitted":$n,"shape_failed":$n""").length
       val kept = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
       var omitted = 0
-      results.sortBy(-_._2).foreach { case (k, _, _, sh) =>
-        if (sh.isEmpty) omitted += 1
-        else {
-          val entry = "\"" + shortKey(k) + "\":\"" + sh + "\""
-          if (remaining - (entry.length + 1) >= 0) {
-            kept += ((k, entry)); remaining -= entry.length + 1
-          } else omitted += 1
-        }
+      val (unshaped, shaped) = results.partition(_._4.isEmpty)
+      shaped.sortBy(-_._2).foreach { case (k, _, _, sh) =>
+        val entry = "\"" + shortKey(k) + "\":\"" + sh + "\""
+        if (remaining - (entry.length + 1) >= 0) {
+          kept += ((k, entry)); remaining -= entry.length + 1
+        } else omitted += 1
       }
       if (kept.isEmpty) ""
       else kept.sortBy(_._1).map(_._2).mkString(""","shapes":{""", ",", "}") +
-        (if (omitted > 0) s""","shape_omitted":$omitted""" else "")
+        (if (omitted > 0) s""","shape_omitted":$omitted""" else "") +
+        (if (unshaped.nonEmpty) s""","shape_failed":${unshaped.size}""" else "")
     }
     // method flags the timing basis: per-query median of N full noop
     // materializations over page-cache-warmed inputs (count()-based r1

@@ -25,15 +25,19 @@ object GraftFunctions {
         mk(children.head)
       })
 
+  private def two(name: String)(mk: (Expression, Expression) => Expression) =
+    (new FunctionIdentifier(name),
+      new ExpressionInfo(classOf[GraftFunctions.type].getName, name),
+      (children: Seq[Expression]) => {
+        require(children.length == 2, s"$name takes exactly 2 arguments")
+        mk(children(0), children(1))
+      })
+
   val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     one("product_agg")(c => ProductAgg(c).toAggregateExpression()),
     one("md5_hash60")(Md5Hash60(_)),
-    (new FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[GraftFunctions.type].getName, "dot_product"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "dot_product takes exactly 2 arguments")
-        DotProduct(children(0), children(1))
-      }))
+    two("dot_product")(DotProduct(_, _)),
+    two("array_minus")(ArrayMinus(_, _)))
 
   def register(spark: SparkSession): Unit =
     all.foreach { case (id, info, builder) =>

@@ -218,7 +218,7 @@ object Exports {
     * That is exactly [[CoreOps.lagArrayDiff]] over date ASC with the
     * added/removed roles SWAPPED in the label; in-paren order follows the
     * source arrays (older comp for '+', current comp for '-'), which the
-    * order-preserving filter diff keeps. The chronological/display
+    * order-preserving diff keeps. The chronological/display
     * alignment (W7) lives in [[Analytics.compositionChanges]]. Global
     * window is the sanctioned date-grain single series. */
   def changesSheet(indexData: DataFrame): DataFrame =

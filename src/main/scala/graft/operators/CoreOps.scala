@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.ArrayMinus.array_minus
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -106,12 +107,15 @@ object CoreOps {
     transform(array_sort(collect_list(struct(rank.as("r"), payload.as("p")))),
       x => x.getField("p"))
 
-  /** W6/W7 helper: day-over-day ordered-set diff columns. Input must have
+  /** W6/W7 helper: day-over-day ordered diff columns. Input must have
     * one row per `order` unit with an array column `arr`; adds `prev`,
-    * `added`, `removed`. Uses a `filter`+`array_contains` lambda rather
-    * than `array_except` because the latter deduplicates — the reference's
-    * list-comprehension diff (`dashboard.py:180-181`) is order-preserving
-    * AND keeps duplicate members, and so does this. */
+    * `added`, `removed`. The reference's list-comprehension diff
+    * (`dashboard.py:180-181`) is order-preserving AND keeps duplicate
+    * members; so is [[graft.functions.ArrayMinus]] (`array_minus`), one
+    * hash set per row, O(|arr|+|prev|). A null member never matches: it
+    * reads as added/removed while present rather than blanking the diff.
+    * The first row per partition (prev null) has added = [] and
+    * removed = null — the contract changeString renders as '-'. */
   def lagArrayDiff(df: DataFrame, part: Seq[Column], order: Seq[Column],
                    arr: Column): DataFrame = {
     // part = Nil is an explicit opt-in to a single-partition global window
@@ -121,40 +125,28 @@ object CoreOps {
     val w = if (part.isEmpty) Window.orderBy(order: _*)
             else Window.partitionBy(part: _*).orderBy(order: _*)
     df.withColumn("prev", lag(arr, 1).over(w))
-      // coalesce closes array_contains' three-valued hole: ONE null
-      // member in the other side makes contains return null for every
-      // non-member, and `!null` silently drops genuinely added/removed
-      // members from the diff. Under the coalesce a null member simply
-      // never matches (it reads as added/removed while present) instead
-      // of blanking the whole diff.
-      // The prev-null FIRST row keeps its case explicit (the coalesce
-      // would otherwise turn its added into the whole array): added = []
-      // and removed = null there — the documented contract changeString
-      // renders as '-'.
+      // array_minus with a null right side returns its left side whole,
+      // so the first row's empty `added` is spelled out: slice(arr, 1, 0)
+      // is the empty array of arr's type (null when arr is null)
       .withColumn("added",
-        when(col("prev").isNull, filter(arr, _ => lit(false)))
-          .otherwise(filter(arr,
-            x => !coalesce(array_contains(col("prev"), x), lit(false)))))
-      .withColumn("removed",
-        filter(col("prev"), x => !coalesce(array_contains(arr, x), lit(false))))
+        when(col("prev").isNull, slice(arr, 1, 0))
+          .otherwise(array_minus(arr, col("prev"))))
+      .withColumn("removed", array_minus(col("prev"), arr))
   }
 
-  /** W6 at scale: like [[lagArrayDiff]] but for SET-valued arrays
-    * (distinct members). `array_except` builds a hash set per row —
-    * O(|a|+|b|) per pair instead of the lambda filter's O(|a|·|b|) — and
-    * for distinct inputs the two coincide (`array_except`'s dedup is a
-    * no-op on sets). Day-grain member sets grow with the entity count
-    * (thousands wide at SF 100), where the quadratic variant dominates
-    * the whole query; keep [[lagArrayDiff]] only where duplicates/order
-    * must survive (W7). */
+  /** W6: like [[lagArrayDiff]] but with SET semantics, for member sets
+    * where only membership counts. `array_except` keeps one copy of each
+    * surviving member and treats null as an ordinary member (a null in
+    * both arrays is neither added nor removed), where [[lagArrayDiff]]
+    * keeps every duplicate and always reports null members. On distinct,
+    * null-free arrays the two coincide (asserted in CoreOpsSpec). */
   def lagSetDiff(df: DataFrame, part: Seq[Column], order: Seq[Column],
                  arr: Column): DataFrame = {
     val w = if (part.isEmpty) Window.orderBy(order: _*)
             else Window.partitionBy(part: _*).orderBy(order: _*)
     df.withColumn("prev", lag(arr, 1).over(w))
-      // coalesce keeps first-row semantics identical to lagArrayDiff's
-      // lambda filter: added = [] (not null) when prev is null, removed
-      // stays null — asserted equivalent in CoreOpsSpec
+      // coalesce keeps first-row semantics identical to lagArrayDiff's:
+      // added = [] (not null) when prev is null, removed stays null
       .withColumn("added", array_except(arr, coalesce(col("prev"), arr)))
       .withColumn("removed", array_except(col("prev"), arr))
   }

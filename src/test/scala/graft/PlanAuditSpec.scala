@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{ArrayContains, ArrayFilter}
 import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.execution.window.WindowExec
 
@@ -16,6 +17,10 @@ import org.apache.spark.sql.execution.window.WindowExec
   *    cardinality is calendar-bounded, not data-bounded (documented at
   *    `CoreOps.lagArrayDiff`), and for the day-grain daily series the
   *    stat/return queries aggregate first.
+  *  - `ArrayFilter` whose lambda holds an `ArrayContains` — the
+  *    interpreted O(|a|·|b|) per-row array diff; `array_minus` (or
+  *    `array_except` for sets) is the linear replacement, so NO query may
+  *    plan it.
   *
   * AQE is disabled for the audit so the physical tree is concrete
   * (AdaptiveSparkPlanExec hides its input plan from collect).
@@ -49,6 +54,11 @@ class PlanAuditSpec extends SparkSpec {
           case w: WindowExec if w.partitionSpec.isEmpty => w
         }.nonEmpty && !sanctionedGlobalWindow(name))
           offenders += s"$name: unsanctioned global Window"
+        if (plan.collectWithSubqueries { case p => p.expressions }.flatten.exists(_.exists {
+          case f: ArrayFilter => f.function.exists(_.isInstanceOf[ArrayContains])
+          case _ => false
+        }))
+          offenders += s"$name: filter(array_contains) lambda diff"
       }
       assert(offenders.isEmpty, "\n" + offenders.mkString("\n"))
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)

@@ -25,6 +25,15 @@ class GraftFunctionsSpec extends SparkSpec {
       .head().getDouble(0)
     assert(sqlDot === 32.0)
 
+    val minusArgs = ("array('b', 'a', 'b', NULL, 'c')", "array('b', NULL, 'x')")
+    val sqlMinus = spark.sql(
+      s"SELECT array_minus(${minusArgs._1}, ${minusArgs._2}) AS m")
+      .head().getSeq[String](0)
+    val apiMinus = spark.range(1).select(ArrayMinus.array_minus(
+      expr(minusArgs._1), expr(minusArgs._2))).head().getSeq[String](0)
+    assert(sqlMinus === Seq("a", null, "c"))
+    assert(apiMinus === sqlMinus)
+
     // window usage through SQL, vs the Column API over the same frame
     Seq((1, 2.0), (2, 3.0), (3, 4.0)).toDF("i", "x").createOrReplaceTempView("wx")
     val sqlWin = spark.sql(

@@ -280,7 +280,7 @@ class DedupSpec extends SparkSpec {
   test("component-aware candidate pruning (r20): confirmedPairsForClustering " +
       "reproduces the full confirm's labels on a planted NEAR-identical " +
       "cluster while confirming ≈K pairs, not C(K,2)") {
-    // The q81 regime: K DISTINCT texts at Jaccard ≈ 0.9 (shared
+    // The q81 regime: K DISTINCT texts at Jaccard ≈ 0.97 (shared
     // boilerplate + per-doc unique suffix — identical-class collapse is
     // a no-op), plus a second smaller near-identical cluster, a true
     // identical pair, and unrelated docs. The facility's contract is
