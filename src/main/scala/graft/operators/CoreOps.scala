@@ -7,7 +7,9 @@ import org.apache.spark.sql.functions._
 
 /** Reusable relational building blocks for the SURVEY.md §2 operator
   * inventory. Each is a thin, lazily-composed `DataFrame => DataFrame`
-  * transform; no caching, no actions — callers own the plan.
+  * transform; no caching, no actions — callers own the plan. The one
+  * exception is [[bucketPairWork]], a guard estimate that returns a
+  * number.
   *
   * Scale notes (100 TB design point):
   *  - Per-group windows shuffle once on the partition keys; every helper
@@ -227,4 +229,27 @@ object CoreOps {
     sum(round(e * f, 0).cast(org.apache.spark.sql.types.DecimalType(30, 0)))
       .cast("double") / f
   }
+
+  /** LSH candidate generation: the distinct id pairs `(a, b)`, `a < b`,
+    * that share a bucket — the equi-join of `(keys, id)` with itself on
+    * `keys`. Buckets are minhash `(band, sig)`, random-hyperplane
+    * `(t, sig)` or a shared shingle `h`. Null ids never pair (`<` on a
+    * null is null), and an id alone in its bucket pairs with nothing.
+    * The exchange carries only key-and-id-width rows; the pair count is
+    * Σ C(c,2) over bucket sizes c ([[bucketPairWork]]) before the
+    * distinct, so callers with hub-shaped buckets guard on that first. */
+  def bucketPairs(df: DataFrame, keys: Seq[String], id: String,
+                  a: String = "doc_a", b: String = "doc_b"): DataFrame = {
+    def side(as: String) = df.select(keys.map(col) :+ col(id).as(as): _*)
+    side(a).join(side(b), keys).filter(col(a) < col(b))
+      .select(a, b).distinct()
+  }
+
+  /** Σ C(c,2) over the sizes c of the `keys` buckets: the `a < b` pairs
+    * [[bucketPairs]]' self-join yields before its distinct. Runs one
+    * job; 0 on an empty input. */
+  def bucketPairWork(df: DataFrame, keys: Seq[String]): Long =
+    df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("c"))
+      .agg(coalesce(sum((col("c") * (col("c") - 1) / 2).cast("long")), lit(0L)))
+      .head().getLong(0)
 }

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.operators.CoreOps
 import graft.pipeline.TextAnalysis.{md5Hash60, shingles, tokens}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -391,11 +392,7 @@ object Dedup {
       exactJaccard(chain, sh).filter(col("jaccard") >= threshold)
         .select(col("doc_a"), col("doc_b")))
     val comp = dedupClusters(spanning)
-    val cands = sigs.select(col("band"), col("sig"), col("doc_id").as("doc_a"))
-      .join(sigs.select(col("band"), col("sig"), col("doc_id").as("doc_b")),
-        Seq("band", "sig"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
+    val cands = CoreOps.bucketPairs(sigs, Seq("band", "sig"), "doc_id")
     // Survivors: endpoints unlabeled (in no confirmed-chain component)
     // or in DIFFERENT components — only these can still merge anything.
     val cross = cands
@@ -442,10 +439,11 @@ object Dedup {
       .select(col("doc_id"), col("rep")))
   }
 
-  /** The collapsed minhash-LSH core shared by [[minhashLsh]] and
-    * [[nearDupLabels]]: identical-class collapse, then shingle → minhash
-    * → banded candidates → exact-Jaccard confirm over ONE representative
-    * per class. Returns (members, rep shingle relation, confirmed rep
+  /** The collapsed minhash-LSH core shared by [[minhashLsh]],
+    * [[nearDupLabels]] and the curation chain behind q90/q91/q92/q96
+    * (`PipelineQueries.curationKept`): identical-class collapse, then
+    * shingle → minhash → banded candidates → exact-Jaccard confirm over
+    * ONE representative per class. Returns (members, rep shingle relation, confirmed rep
     * pairs at `threshold`) — candidate and confirm work is
     * O(distinct-class pairs), never O(copies²) (the r18 planted spec's
     * assertion).
@@ -458,9 +456,9 @@ object Dedup {
     * driver bench recorded q37 at 15.7 s, dominated by exactly that).
     * See [[graft.Pin]] for why checkpoint-over-cache and serialized-
     * over-deserialized, and for the executor-loss trade-off. */
-  private[pipeline] def collapsedRepPairs(docs: DataFrame, numHashes: Int,
-                                          rowsPerBand: Int, shingleN: Int,
-                                          threshold: Double)
+  private[graft] def collapsedRepPairs(docs: DataFrame, numHashes: Int,
+                                       rowsPerBand: Int, shingleN: Int,
+                                       threshold: Double)
       : (DataFrame, DataFrame, DataFrame) = {
     val members = identicalClasses(docs)
     val repDocs = docs.join(
@@ -468,11 +466,7 @@ object Dedup {
       Seq("doc_id"), "left_semi")
     val sh = graft.Pin.ser(TextAnalysis.hashedShingles(repDocs, shingleN))
     val sigs = bandSigs(sh, numHashes, rowsPerBand)
-    val cands = sigs.select(col("band"), col("sig"), col("doc_id").as("doc_a"))
-      .join(sigs.select(col("band"), col("sig"), col("doc_id").as("doc_b")),
-        Seq("band", "sig"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
+    val cands = CoreOps.bucketPairs(sigs, Seq("band", "sig"), "doc_id")
     (members, sh, exactJaccard(cands, sh).filter(col("jaccard") >= threshold))
   }
 
@@ -929,11 +923,8 @@ object Dedup {
     // Consumed 3× (both sides of the pair self-join + the confirm);
     // materialized once, same rationale as [[minhashLsh]].
     val sh = graft.Pin.ser(TextAnalysis.hashedShingles(docs, shingleN))
-    val pairs = sh.select(col("doc_id").as("doc_a"), col("h"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("h")), Seq("h"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-    exactJaccard(pairs, sh).filter(col("jaccard") >= threshold)
+    exactJaccard(CoreOps.bucketPairs(sh, Seq("h"), "doc_id"), sh)
+      .filter(col("jaccard") >= threshold)
   }
 
   /** SimHash signature per document over DISTINCT whitespace tokens:

@@ -147,13 +147,11 @@ object IncrementalBm25 {
     // jobs): the saved codegen'd split+size scan is as cheap as the
     // shuffle it buys back. Kept this shape for the lower action count
     // and because it doesn't lean on empty-string split semantics.
-    val lens = docs.select(col("doc_id"),
-      size(TextAnalysis.tokens(col("text"))).cast("long").as("dl"))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val tf = docs
+    val lens = graft.Pin.ser(docs.select(col("doc_id"),
+      size(TextAnalysis.tokens(col("text"))).cast("long").as("dl")))
+    val tf = graft.Pin.ser(docs
       .select(col("doc_id"), explode(TextAnalysis.tokens(col("text"))).as("term"))
-      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf")))
     val tb = pmod(Sampling.bucket(col("term"), "bm25"), lit(nBuckets)).cast("int")
     val postings = tf.join(lens, Seq("doc_id"))
       .withColumn("tbucket", tb).withColumn("batch", lit(batchId))

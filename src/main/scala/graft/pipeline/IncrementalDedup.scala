@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.operators.CoreOps
 import graft.sources.KeyedParquetStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -239,17 +240,12 @@ object IncrementalDedup {
       members.filter(col("doc_id") === col("rep")).select(col("doc_id")),
       Seq("doc_id"), "left_semi")
     // Materialized once per call: consumed by the band build, the
-    // vs-store confirm and the in-batch confirm (see minhashLsh's
-    // rationale for localCheckpoint over cache()).
-    val sh = TextAnalysis.hashedShingles(repBatch, shingleN).localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val bands = Dedup.bandSigs(sh, numHashes, rowsPerBand).localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    // vs-store confirm and the in-batch confirm (see graft.Pin).
+    val sh = graft.Pin.ser(TextAnalysis.hashedShingles(repBatch, shingleN))
+    val bands = graft.Pin.ser(Dedup.bandSigs(sh, numHashes, rowsPerBand))
 
     // In-batch candidates + confirm at the REP grain: minhashLsh's shape.
-    val selfCands = bands.select(col("band"), col("sig"), col("doc_id").as("doc_a"))
-      .join(bands.select(col("band"), col("sig"), col("doc_id").as("doc_b")),
-        Seq("band", "sig"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
+    val selfCands = CoreOps.bucketPairs(bands, Seq("band", "sig"), "doc_id")
     val selfPairs = Dedup.exactJaccard(selfCands, sh)
       .filter(col("jaccard") >= threshold).select("doc_a", "doc_b")
 
@@ -278,11 +274,10 @@ object IncrementalDedup {
       // and the exactJaccard pair explode — without the pin each
       // consumer re-reads the store and re-runs the band join (the q37
       // recompute lesson).
-      val hits = bands
+      val hits = graft.Pin.ser(bands
         .join(sb.select(col("band"), col("sig"), col("doc_id").as("doc_b")),
           Seq("band", "sig"))
-        .select(col("doc_id").as("doc_a"), col("doc_b")).distinct()
-        .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        .select(col("doc_id").as("doc_a"), col("doc_b")).distinct())
       // doc_a <> doc_b: on an ingest RETRY the batch's own kept docs are
       // already indexed, and a doc must not read as a duplicate of
       // ITSELF — but its identical classmates DO match the stored copy
@@ -335,15 +330,14 @@ object IncrementalDedup {
     val marked0 = batch.join(nonCanonical, Seq("doc_id"), "left")
     val marked = dupOfStored.fold(marked0.withColumn("__stored_dup", lit(null).cast("boolean")))(
       d => marked0.join(d, Seq("doc_id"), "left"))
-    val labeled = marked
+    // ingestBatch's upserts re-derive from the checkpointed relations;
+    // the caller's view is pinned so all consumers agree
+    val labeled = graft.Pin.ser(marked
       .withColumn("status",
         when(col("__stored_dup"), lit("dup_of_stored"))
           .when(col("__batch_dup"), lit("dup_in_batch"))
           .otherwise(lit("kept")))
-      .drop("__stored_dup", "__batch_dup")
-      // ingestBatch's upserts re-derive from the checkpointed relations;
-      // the caller's view is pinned so all consumers agree
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .drop("__stored_dup", "__batch_dup"))
     (labeled, bands, sh)
   }
 }

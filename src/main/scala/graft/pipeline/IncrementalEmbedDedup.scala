@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.operators.CoreOps
 import graft.sources.KeyedParquetStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -204,20 +205,14 @@ object IncrementalEmbedDedup {
     // passes by construction (collapse IS the fix), while a genuinely
     // hub-shaped batch still refuses loudly. The labeling output is
     // linear either way — member pairs never materialize here.
-    val selfEst = sigs.groupBy("t", "sig").agg(count(lit(1)).as("c"))
-      .agg(coalesce(sum((col("c") * (col("c") - 1) / 2).cast("long")), lit(0L)))
-      .head().getLong(0)
+    val selfEst = CoreOps.bucketPairWork(sigs, Seq("t", "sig"))
     require(selfEst <= maxCandidatePairs,
       s"embed-dedup ingest: ~$selfEst within-bucket candidate pairs inside this " +
         s"batch exceed maxCandidatePairs=$maxCandidatePairs — $bits bits is too " +
         "coarse for the batch (occupancy is n/2^bits per table and pair work is " +
         "occupancy-quadratic); raise bits toward log2(n/targetOccupancy), split " +
         "the batch, or raise maxCandidatePairs deliberately")
-    val selfCands = sigs.select(col("t"), col("sig"), col("vec_id").as("doc_a"))
-      .join(sigs.select(col("t"), col("sig"), col("vec_id").as("doc_b")),
-        Seq("t", "sig"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
+    val selfCands = CoreOps.bucketPairs(sigs, Seq("t", "sig"), "vec_id")
     val selfPairs = selfCands
       .join(v.select(col("vec_id").as("doc_a"), col("e").as("va")), Seq("doc_a"))
       .join(v.select(col("vec_id").as("doc_b"), col("e").as("vb")), Seq("doc_b"))

@@ -176,7 +176,19 @@ object IncrementalIvf {
     * repairs the duplication instead of writing it back verbatim. Run
     * from the stream owner's thread, never concurrently with ingest
     * (the writer locks serialize the conflict to a fail-fast either
-    * way). */
+    * way).
+    *
+    * Memory and resilience: the collapsed read-back (`corpus`) is one
+    * [[graft.Pin.ser]] of the WHOLE assigned store — every vector, held
+    * serialized in executor block storage with disk spill until the
+    * replace finishes. It is a local checkpoint: its blocks live only on
+    * the executor that computed them and are not recomputed when that
+    * executor is lost, so an executor loss mid-retrain fails the retrain
+    * with a missing-checkpoint-block error; re-running it converges, as
+    * for any crash above. A multi-executor deployment that needs the
+    * retrain to survive executor loss swaps this pin for
+    * `persist(MEMORY_AND_DISK_SER_2)` with an explicit unpersist after
+    * the second replace (see [[graft.Pin]]). */
   def retrain(spark: SparkSession, centroidsPath: String,
               assignedPath: String, numCells: Int = 8,
               trainIters: Int = 2, batchLabel: String = "retrain",
@@ -212,9 +224,8 @@ object IncrementalIvf {
         col("w")("cv").as("embedding"), col("w")("batch").as("batch")))
     // KB-sized; pinned so the centroid relation is not re-derived from
     // the store mid-replace
-    val index = Similarity.buildIvfIndex(corpus, numCells, trainIters)
-      .withColumn("iv", lit(v))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val index = graft.Pin.ser(Similarity.buildIvfIndex(corpus, numCells, trainIters)
+      .withColumn("iv", lit(v)))
     val keep = keepBatches.toSeq
     val reassigned = Similarity
       .assignIvfCells(corpus, index, passthrough = Seq("batch"))

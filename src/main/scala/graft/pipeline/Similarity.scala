@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.operators.CoreOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -541,9 +542,7 @@ object Similarity {
     // whose expansion is inherently quadratic (the pair CONTRACT, not
     // the plan) still refuses loudly; cluster-grain consumers belong on
     // cosineClusters.
-    val est = sigs.groupBy("t", "sig").agg(count(lit(1)).as("c"))
-      .agg(coalesce(sum((col("c") * (col("c") - 1) / 2).cast("long")), lit(0L)))
-      .head().getLong(0)
+    val est = CoreOps.bucketPairWork(sigs, Seq("t", "sig"))
     require(est <= maxCandidatePairs,
       s"cosinePairsLsh: ~$est within-bucket candidate pairs exceed " +
         s"maxCandidatePairs=$maxCandidatePairs — $bits bits is too coarse for this " +
@@ -551,10 +550,7 @@ object Similarity {
         "quadratic); raise bits toward log2(n/targetOccupancy) and add tables " +
         "to recover recall, or raise maxCandidatePairs deliberately")
     val cands = graft.Pin.ser(
-      sigs.select(col("t"), col("sig"), col("vec_id").as("id_a"))
-        .join(sigs.select(col("t"), col("sig"), col("vec_id").as("id_b")), Seq("t", "sig"))
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b").distinct())
+      CoreOps.bucketPairs(sigs, Seq("t", "sig"), "vec_id", "id_a", "id_b"))
     val k = grouped.select(col("rep"), col("__k"))
     val expEst = cands
       .join(k.select(col("rep").as("id_a"), col("__k").as("__ka")), Seq("id_a"))

@@ -3442,32 +3442,12 @@ object PipelineQueries {
       .select(col("doc_id"), col("n_tokens")))
     val qualityText = pool.select(col("doc_id"), col("text"))
       .join(feats.select(col("doc_id")), Seq("doc_id"), "left_semi")
-    // Stage 2 — identical-class collapse, then ONE pinned shingle pass
-    // over the REPRESENTATIVES for everything downstream (r19: this
-    // inline chain predated the r18-verdict collapse and kept the
-    // quadratic identical-cluster candidate stage the dupheavy corpus
-    // was built to expose — a 1500-copy boilerplate cluster passes the
-    // quality gate BY DESIGN and previously band-joined itself C(K,2)
-    // times here, exactly q37's measured 169.9 s regime). Labels from
-    // the collapsed core are byte-identical to the uncollapsed chain
-    // (Dedup.nearDupLabels' exactness argument: identical texts ⇒
-    // identical shingles/candidates/Jaccard/closure, min-id labels
-    // preserved because each rep is its class's min id; isolated
-    // shingled cliques label themselves via expandMemberLabels).
-    val members = Dedup.identicalClasses(qualityText)
-    val repText = qualityText.join(
-      members.filter(col("doc_id") === col("rep")).select(col("doc_id")),
-      Seq("doc_id"), "left_semi")
-    val sh = graft.Pin.ser(TextAnalysis.hashedShingles(repText, 3))
-    val sigs = Dedup.bandSigs(sh, numHashes = 16, rowsPerBand = 4)
-    val cands = sigs.select(col("band"), col("sig"), col("doc_id").as("doc_a"))
-      .join(sigs.select(col("band"), col("sig"), col("doc_id").as("doc_b")),
-        Seq("band", "sig"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-    val pairs = Dedup.exactJaccard(cands, sh).filter(col("jaccard") >= 0.5)
+    // Stage 2 — the collapsed near-dup core, Dedup.collapsedRepPairs.
+    val threshold = 0.5
+    val (members, sh, pairs) =
+      Dedup.collapsedRepPairs(qualityText, 16, 4, 3, threshold)
     val labels = Dedup.expandMemberLabels(members, sh,
-      pairs.select(col("doc_a"), col("doc_b")), threshold = 0.5)
+      pairs.select(col("doc_a"), col("doc_b")), threshold)
     // Stage 3 — quality-aware election: the LONGEST cluster member.
     // The winner is always a rep (a non-rep ties its own rep on
     // n_tokens — identical text — and loses the id tie-break), so the

@@ -81,4 +81,26 @@ class PlanAuditSpec extends SparkSpec {
           "is a hot-key straggler on boilerplate-heavy corpora")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
+
+  test("localCheckpoint is called only in Pin.scala: Pin.ser owns the pin decision") {
+    // Storage level and checkpoint-over-cache are decided once, in
+    // graft.Pin; a hand-written localCheckpoint elsewhere is a copy of
+    // that decision that can drift from it.
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"source tree not found at ${root.getAbsolutePath}")
+    val pin = new java.io.File(root, "graft/Pin.scala").getCanonicalFile
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    val sources = walk(root).filter(_.getName.endsWith(".scala"))
+    assert(sources.exists(_.getCanonicalFile == pin), s"$pin not found")
+    val offenders = sources.filter(_.getCanonicalFile != pin).flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.getLines().zipWithIndex.collect {
+        case (line, i) if line.contains("localCheckpoint(") => s"${f.getPath}:${i + 1}"
+      }.toList
+      finally src.close()
+    }
+    assert(offenders.isEmpty,
+      "call graft.Pin.ser instead of localCheckpoint:\n" + offenders.mkString("\n"))
+  }
 }

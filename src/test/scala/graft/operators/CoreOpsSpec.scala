@@ -151,4 +151,25 @@ class CoreOpsSpec extends SparkSpec {
       lit(d("2024-01-07")), expr("INTERVAL 4 DAYS"), Seq($"dt".desc))
     assert(miss.count() === 0)
   }
+
+  test("bucketPairs: distinct a < b pairs per shared bucket; bucketPairWork is Σ C(c,2)") {
+    val sigs = Seq[(Int, Long, Option[Long])](
+      (0, 10L, Some(2L)), (0, 10L, Some(1L)),   // 1 and 2 share two buckets
+      (1, 20L, Some(1L)), (1, 20L, Some(2L)),
+      (1, 30L, Some(3L)), (1, 30L, None),       // 3's only partner is a null id
+      (2, 10L, Some(4L)),                       // 4 alone in its bucket
+      (3, 10L, Some(8L)), (3, 10L, Some(6L)), (3, 10L, Some(7L))
+    ).toDF("band", "sig", "doc_id")
+    val pairs = CoreOps.bucketPairs(sigs, Seq("band", "sig"), "doc_id")
+    assert(pairs.columns.toSeq === Seq("doc_a", "doc_b"))
+    val got = pairs.as[(Long, Long)].collect().toSeq
+    assert(got.forall { case (a, b) => a < b })
+    assert(got.sorted === Seq((1L, 2L), (6L, 7L), (6L, 8L), (7L, 8L)))
+    val named = CoreOps.bucketPairs(sigs, Seq("band", "sig"), "doc_id", "id_a", "id_b")
+    assert(named.columns.toSeq === Seq("id_a", "id_b"))
+    assert(named.count() === 4)
+    // bucket sizes 2, 2, 2 (the null id counts), 1 and 3
+    assert(CoreOps.bucketPairWork(sigs, Seq("band", "sig")) === 1 + 1 + 1 + 0 + 3)
+    assert(CoreOps.bucketPairWork(sigs.limit(0), Seq("band", "sig")) === 0L)
+  }
 }
