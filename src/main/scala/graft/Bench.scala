@@ -1,28 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Static conf, default 100: the full registry generates far more
-      // distinct codegen classes than that, so the class cache thrashes —
-      // the r8 evidence run shows q49 Janino-recompiling 66 classes on
-      // EVERY run (~1-2 s of its fixed cost, and the component that
-      // amplifies under ambient CPU load, which is where the r7
-      // driver-vs-local 10.8 s/4.5 s divergence lives). One registry run
-      // compiles ~2k distinct classes; cache them all.
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // Per-run evidence sidecar (JSONL, one row per timed run): scheduler
     // counts (jobs/stages/tasks), GC-time and codegen-compile deltas, and
     // heap occupancy — the r7 verdict's q49/q37 driver-vs-local bench gap

@@ -55,15 +55,7 @@ object EdgeCorpus {
     require(args.length == 3,
       "usage: graft.EdgeCorpus <srcSfDir> <dstDir> " +
         "<empty|tiny|nulls|unicode|dupheavy>")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     run(spark, args(0), args(1), args(2))
     spark.stop()
   }

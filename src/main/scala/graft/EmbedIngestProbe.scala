@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev utility: wall-time evidence that
@@ -30,15 +29,7 @@ object EmbedIngestProbe {
     val Array(sfDir, storeDir, nStr) = args
     val n = nStr.toInt
     require(n >= 2, s"nBatches must be >= 2 to exercise the vs-store face: $n")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val (sigsP, vecsP) = (s"$storeDir/sigs", s"$storeDir/vecs")
     val emb = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-job scheduler diagnostic for one registry query: run it once
   * and print one ORDERED line per Spark job — index, task count, and
@@ -25,16 +24,7 @@ object JobProbe {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: graft.JobProbe <sfDir> <queryName>")
     val Array(sfDir, qName) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val fn = SparkEntry.queries.getOrElse(qName,
       sys.error(s"unknown query: $qName"))
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: print a registry query's physical plan —
   * `explain("formatted")` by default, or any Spark explain mode given
   * as the third arg (`simple`, `extended`, `codegen`, `cost`,
@@ -21,15 +19,7 @@ object PlanDump {
       "usage: graft.PlanDump <sfDir> <queryName> [mode]")
     val (sfDir, qName) = (args(0), args(1))
     val mode = if (args.length == 3) args(2) else "formatted"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val fn = SparkEntry.queries.getOrElse(qName, sys.error(s"unknown query: $qName"))
     // NOTE: queries whose builder runs eager stages (Pin.ser, stateful
     // ingests) execute those while BUILDING the frame; the printed plan

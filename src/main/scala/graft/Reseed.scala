@@ -46,15 +46,7 @@ object Reseed {
     require(args.length == 2 || args.length == 3,
       "usage: graft.Reseed <srcSfDir> <dstDir> [salt]")
     val salt = if (args.length == 3) args(2) else "r13"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     run(spark, args(0), args(1), salt)
     spark.stop()
   }

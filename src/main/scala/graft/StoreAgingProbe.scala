@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev utility (r12 verdict item 5): age every persisted-index family
@@ -65,15 +65,7 @@ object StoreAgingProbe {
     val families = if (args.length == 5) args(4).split(",").map(_.trim).toSet
       else Set("dedup", "bm25", "ivf", "embed", "refresh", "refreshvec",
         "growvec")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     import graft.sources.KeyedParquetStore
 
     def dataFiles(paths: Seq[String]): Long = paths.map { p =>

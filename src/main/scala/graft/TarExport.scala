@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev main: ship the q82 training-export manifest as WebDataset-style
@@ -16,15 +15,7 @@ import org.apache.spark.sql.functions._
 object TarExport {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: graft.TarExport <sfDir> <outDir>")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val t0 = System.nanoTime()
     val manifest = SparkEntry.queries("q82_training_export")(spark, args(0))
     val chunks = pipeline.TextAnalysis.chunkDocuments(

@@ -94,6 +94,10 @@ object IndexCalculator {
     * `equal_weight_index.py:47`), composition as the cap-ordered ticker
     * array. One shuffle on `date`; rank-limit pushdown keeps K rows per
     * partition before the agg.
+    *
+    * The Σ is [[CoreOps.exactSum]] at its default scale 4: exact, and
+    * the same under any partitioning, for prices on the 1e-4 tick. A
+    * plain double sum depends on the order rows reach it.
     */
   def computeIndex(stocks: DataFrame, k: Int): DataFrame =
     CoreOps.topKPerGroup(stocks,
@@ -101,7 +105,7 @@ object IndexCalculator {
         order = Seq(col("market_cap").desc, col("ticker")), k = k)
       .groupBy(col("date"))
       .agg(
-        (sum(col("share_price")) / k).as("index_value"),
+        (CoreOps.exactSum(col("share_price")) / k).as("index_value"),
         CoreOps.orderedCollect(col("rn"), col("ticker")).as("composition"))
 
   /** §3.3 point query (`equal_weight_index.py:56-71`). */
@@ -172,12 +176,9 @@ object Analytics {
   /** J4 (`dashboard.py:317-349`): composition at `selected` with holiday
     * fallback — walk back at most 4 days (the reference errors once 5
     * look-backs fail); empty result = the reference's error path. */
-  def asOfComposition(indexData: DataFrame, selected: java.sql.Date): DataFrame = {
-    val sel = lit(selected)
-    CoreOps.latestPerGroup(
-      indexData.filter(col("date") <= sel && col("date") >= date_sub(sel, 4)),
-      part = Nil, order = Seq(col("date").desc))
-  }
+  def asOfComposition(indexData: DataFrame, selected: java.sql.Date): DataFrame =
+    CoreOps.asOfBackward(indexData, part = Nil, ts = col("date"), probe = lit(selected),
+      maxBack = expr("INTERVAL 5 DAYS"), order = Seq(col("date").desc))
 
   /** O3+O2 (`dashboard.py:364-373`): last `n` dates of the metrics table,
     * newest first. */

@@ -2,15 +2,27 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.ProductAgg.product_agg
+import graft.marketviz.{Analytics, IndexCalculator}
 import graft.operators.CoreOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** SURVEY.md §2's operator inventory, one named query per operator family,
-  * recast onto the harness testdata (FIXTURES.md §A). The MarketViz "stocks"
-  * roles map as: trading day = `l_shipdate` day, instrument = lineitem id
-  * `l_orderkey-l_linenumber` (unique), market cap = `l_extendedprice`.
+  * recast onto the harness testdata (FIXTURES.md §A).
+  *
+  * The paper's faces (q01, q03, q06, q11, q15, q45) call `graft.marketviz.*`,
+  * the code a user calls and the benchmark times; this object only maps
+  * the testdata onto its roles. [[paperIndex]] maps lineitem onto `stocks`:
+  *  - date = the `l_shipdate` day;
+  *  - ticker = `struct(l_orderkey, l_linenumber)`: struct order is
+  *    field-wise, so the cap tiebreak is the oracle's numeric
+  *    `ORDER BY l_orderkey, l_linenumber` (the `lid` string would put
+  *    "10-1" before "9-1"); the composition is mapped back to `lid`;
+  *  - market_cap = `l_extendedprice`, the oracle's ranking key;
+  *  - share_price = `l_extendedprice` rounded to cents, the oracle's
+  *    quantization: the index Σ at scale 4 is then 100x the oracle's
+  *    integer Σ of cents, and both divide down to the same double.
   *
   * Operator IDs in each query's comment refer to SURVEY.md §2.
   */
@@ -39,18 +51,24 @@ object ParityQueries {
       |                            ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rn
       |  FROM lineitem)""".stripMargin
 
-  /** W2 + A1 + A3: the flagship — per-day top-K "index": rank by price
-    * desc (unique-key tiebreak), Σ/K index value (constant divisor,
-    * `equal_weight_index.py:47`), rank-ordered composition. One shuffle on
-    * `d`; `InferWindowGroupLimit` keeps K rows per group pre-filter. */
-  private def indexDaily(s: SparkSession, dir: String): DataFrame =
-    CoreOps.topKPerGroup(li(s, dir).select("d", "lid", "l_orderkey", "l_linenumber", "l_extendedprice"),
-        Seq(col("d")),
-        Seq(col("l_extendedprice").desc, col("l_orderkey"), col("l_linenumber")), K)
-      .groupBy(col("d"))
-      .agg(
-        (CoreOps.exactSum(col("l_extendedprice"), 2) / K).as("index_value"),
-        array_join(CoreOps.orderedCollect(col("rn"), col("lid")), ",").as("composition"))
+  /** The paper's index ([[IndexCalculator.computeIndex]]) over lineitem
+    * under the role map in the header: `(date, index_value, composition)`
+    * with the composition as rank-ordered `lid` strings. */
+  private def paperIndex(s: SparkSession, dir: String): DataFrame = {
+    val stocks = Tables.lineitem(s, dir).select(
+      day(col("l_shipdate")).as("date"),
+      struct(col("l_orderkey"), col("l_linenumber")).as("ticker"),
+      (round(col("l_extendedprice") * 100) / 100).as("share_price"),
+      col("l_extendedprice").as("market_cap"))
+    IndexCalculator.computeIndex(stocks, K).withColumn("composition",
+      transform(col("composition"),
+        t => concat_ws("-", t.getField("l_orderkey"), t.getField("l_linenumber"))))
+  }
+
+  /** q01/q11's row shape: `d`, the index value, the composition joined. */
+  private def indexRows(index: DataFrame): DataFrame =
+    index.select(col("date").as("d"), col("index_value"),
+      array_join(col("composition"), ",").as("composition"))
 
   private val indexDailySql =
     s"""$liRankedSql
@@ -59,21 +77,16 @@ object ParityQueries {
       |       string_agg(lid, ',' ORDER BY rn) AS composition
       |FROM r WHERE rn <= $K GROUP BY d""".stripMargin
 
-  /** Per-day rank-ordered composition as a real array (internal reuse). */
-  private def dayComposition(s: SparkSession, dir: String): DataFrame =
-    CoreOps.topKPerGroup(li(s, dir).select("d", "lid", "l_orderkey", "l_linenumber", "l_extendedprice"),
-        Seq(col("d")),
-        Seq(col("l_extendedprice").desc, col("l_orderkey"), col("l_linenumber")), K)
-      .groupBy(col("d"))
-      .agg(CoreOps.orderedCollect(col("rn"), col("lid")).as("arr"))
-
   private val dayCompositionSql =
     s"""$liRankedSql, comp AS (
       |  SELECT d, list(lid ORDER BY rn) AS arr FROM r WHERE rn <= $K GROUP BY d)""".stripMargin
 
   val all: Seq[Q] = Seq(
 
-    Q("q01_index_daily", indexDaily, Some(indexDailySql)),
+    // W2 + A1 + A3: the flagship — per-day top-K index, Σ/K index value
+    // (constant divisor, `equal_weight_index.py:47`), rank-ordered
+    // composition.
+    Q("q01_index_daily", (s, dir) => indexRows(paperIndex(s, dir)), Some(indexDailySql)),
 
     // W1: latest row per group (top-1 by recency, total order).
     Q("q02_latest_per_group",
@@ -96,21 +109,17 @@ object ParityQueries {
         |SELECT l_suppkey, d AS latest_day, l_extendedprice AS latest_price
         |FROM r WHERE rn = 1""".stripMargin)),
 
-    // W3 + W4: daily and cumulative percent returns over exact daily totals.
+    // W3 + W4: the paper's daily and cumulative percent returns
+    // (Analytics.summaryMetrics) over exact daily order totals.
     Q("q03_daily_returns",
       (s, dir) => {
         val daily = Tables.orders(s, dir)
-          .groupBy(day(col("o_orderdate")).as("d"))
-          .agg(CoreOps.exactSum(col("o_totalprice"), 2).as("total"))
-        val w = Window.orderBy(col("d"))
-        val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        daily
-          .withColumn("daily_return",
-            round((col("total") - lag(col("total"), 1).over(w))
-              / lag(col("total"), 1).over(w) * 100, 8))
-          .withColumn("cum_return",
-            round((col("total") - first(col("total")).over(wRun))
-              / first(col("total")).over(wRun) * 100, 8))
+          .groupBy(day(col("o_orderdate")).as("date"))
+          .agg(CoreOps.exactSum(col("o_totalprice"), 2).as("index_value"))
+        Analytics.summaryMetrics(daily).select(col("date").as("d"),
+          col("index_value").as("total"),
+          round(col("daily_return"), 8).as("daily_return"),
+          round(col("cumulative_return"), 8).as("cum_return"))
       },
       Some("""WITH dly AS (
         |  SELECT CAST(o_orderdate AS DATE) AS d,
@@ -166,12 +175,11 @@ object ParityQueries {
         |FROM w WHERE prev IS NOT NULL AND st <> prev""".stripMargin)),
 
     // W7: order-preserving +(added) , -(removed) change strings over the
-    // rank-ordered composition arrays; "-" for unchanged and the first day.
+    // rank-ordered compositions (Analytics.compositionChanges); "-" for
+    // unchanged and the first day.
     Q("q06_composition_diff",
       (s, dir) =>
-        CoreOps.lagArrayDiff(dayComposition(s, dir), Nil, Seq(col("d")), col("arr"))
-          .select(col("d"),
-            CoreOps.changeString(col("added"), col("removed")).as("composition_changes")),
+        Analytics.compositionChanges(paperIndex(s, dir)).withColumnRenamed("date", "d"),
       Some(s"""$dayCompositionSql,
         |w AS (SELECT d, arr, lag(arr) OVER (ORDER BY d) AS prev FROM comp),
         |diff AS (
@@ -351,10 +359,12 @@ object ParityQueries {
         |  round(rev / (CAST(SUM(CAST(round((rev) * 100) AS DECIMAL(30,0))) OVER () AS DOUBLE) / 100), 8) AS share
         |FROM rev""".stripMargin)),
 
-    // P7/P9: point lookup on the computed index — the date filter prunes
-    // before the window (pushed through partition-key d to the scan).
+    // P7/P9: point lookup on the computed index (IndexCalculator.indexAtDate)
+    // — the date filter prunes before the window (pushed through the
+    // partition key to the scan).
     Q("q11_point_lookup",
-      (s, dir) => indexDaily(s, dir).filter(col("d") === lit("1998-03-15").cast("date")),
+      (s, dir) => indexRows(IndexCalculator.indexAtDate(paperIndex(s, dir),
+        java.sql.Date.valueOf("1998-03-15"))),
       Some(s"""$liRankedSql
         |SELECT d,
         |       (CAST(SUM(CAST(round((l_extendedprice) * 100) AS DECIMAL(30,0))) AS DOUBLE) / 100) / $K AS index_value,
@@ -397,9 +407,9 @@ object ParityQueries {
     // (`dashboard.py:91-92`).
     Q("q15_array_slice",
       (s, dir) =>
-        dayComposition(s, dir).select(col("d"),
-          array_join(slice(col("arr"), 1, 3), ",").as("top3"),
-          greatest(size(col("arr")) - 3, lit(0)).cast("long").as("n_rest")),
+        paperIndex(s, dir).select(col("date").as("d"),
+          array_join(slice(col("composition"), 1, 3), ",").as("top3"),
+          greatest(size(col("composition")) - 3, lit(0)).cast("long").as("n_rest")),
       Some(s"""$dayCompositionSql
         |SELECT d, array_to_string(arr[1:3], ',') AS top3,
         |       greatest(len(arr) - 3, 0) AS n_rest
@@ -571,10 +581,14 @@ object ParityQueries {
     // :217), so labels land with +/- inverted against the PREVIOUS date
     // and the pad '-' on the oldest row (Exports.changesSheet; golden
     // index_data.xlsx sheet 3). Same plan as q06 with the roles swapped —
-    // the oracle proves the inversion, not just the diff.
+    // the oracle proves the inversion, not just the diff. Not routed
+    // through Exports.changesSheet: its newest-first orderBy would add a
+    // range exchange and a sampling job.
     Q("q45_changes_export",
       (s, dir) =>
-        CoreOps.lagArrayDiff(dayComposition(s, dir), Nil, Seq(col("d")), col("arr"))
+        CoreOps.lagArrayDiff(
+            paperIndex(s, dir).select(col("date").as("d"), col("composition").as("arr")),
+            Nil, Seq(col("d")), col("arr"))
           .select(col("d"),
             CoreOps.changeString(col("removed"), col("added")).as("composition_changes")),
       Some(s"""$dayCompositionSql,

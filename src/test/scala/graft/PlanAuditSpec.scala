@@ -82,25 +82,45 @@ class PlanAuditSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
+  private val mainRoot = new java.io.File("src/main/scala")
+
+  /** Every `.scala` file under `root`. */
+  private def sources(root: java.io.File): Seq[java.io.File] = {
+    assert(root.isDirectory, s"source tree not found at ${root.getAbsolutePath}")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    walk(root).filter(_.getName.endsWith(".scala"))
+  }
+
+  /** `path:line` of every line in `files` that contains one of `calls`. */
+  private def callSites(files: Seq[java.io.File], calls: Seq[String]): Seq[String] =
+    files.flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.getLines().zipWithIndex.collect {
+        case (line, i) if calls.exists(line.contains) => s"${f.getPath}:${i + 1}"
+      }.toList
+      finally src.close()
+    }
+
   test("localCheckpoint is called only in Pin.scala: Pin.ser owns the pin decision") {
     // Storage level and checkpoint-over-cache are decided once, in
     // graft.Pin; a hand-written localCheckpoint elsewhere is a copy of
     // that decision that can drift from it.
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"source tree not found at ${root.getAbsolutePath}")
-    val pin = new java.io.File(root, "graft/Pin.scala").getCanonicalFile
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-    val sources = walk(root).filter(_.getName.endsWith(".scala"))
-    assert(sources.exists(_.getCanonicalFile == pin), s"$pin not found")
-    val offenders = sources.filter(_.getCanonicalFile != pin).flatMap { f =>
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try src.getLines().zipWithIndex.collect {
-        case (line, i) if line.contains("localCheckpoint(") => s"${f.getPath}:${i + 1}"
-      }.toList
-      finally src.close()
-    }
+    val pin = new java.io.File(mainRoot, "graft/Pin.scala").getCanonicalFile
+    val all = sources(mainRoot)
+    assert(all.exists(_.getCanonicalFile == pin), s"$pin not found")
+    val offenders = callSites(all.filter(_.getCanonicalFile != pin), Seq("localCheckpoint("))
     assert(offenders.isEmpty,
       "call graft.Pin.ser instead of localCheckpoint:\n" + offenders.mkString("\n"))
+  }
+
+  test("no query builds its own per-date top-K: the paper's index lives in IndexCalculator") {
+    // The registry's index faces are role adapters over graft.marketviz;
+    // a topKPerGroup + orderedCollect in a query is a second copy of
+    // IndexCalculator.computeIndex that the benchmark never times.
+    val queries = sources(new java.io.File(mainRoot, "graft/queries"))
+    val offenders = callSites(queries, Seq("topKPerGroup(", "orderedCollect("))
+    assert(offenders.isEmpty,
+      "call graft.marketviz.IndexCalculator.computeIndex instead:\n" + offenders.mkString("\n"))
   }
 }

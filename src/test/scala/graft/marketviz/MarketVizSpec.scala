@@ -79,6 +79,18 @@ class MarketVizSpec extends SparkSpec {
     assert(rows(4) === ((1.0 + 2.0 + 3.0) / 3.0, "A,B,C"))    // tie -> ticker asc
   }
 
+  test("computeIndex sums share prices exactly under any partitioning (A1)") {
+    // ten 0.1 prices: a plain double Σ in row order is 0.9999999999999999
+    assert(Seq.fill(10)(0.1).sum != 1.0)
+    val tenths = (0 until 10).map(i => (s"T$i", d("2024-01-01"), 0.1, 100.0 - i))
+      .toDF("ticker", "date", "share_price", "market_cap")
+    for (n <- Seq(1, 4)) {
+      val got = IndexCalculator.computeIndex(tenths.repartition(n), k = 10)
+        .select($"index_value").as[Double].collect().toSeq
+      assert(got === Seq(1.0 / 10), s"under $n partitions")
+    }
+  }
+
   test("indexAtDate point lookup returns one row or none (P9)") {
     assert(IndexCalculator.indexAtDate(index, d("2024-01-02")).count() === 1)
     assert(IndexCalculator.indexAtDate(index, d("2024-02-01")).count() === 0)
