@@ -110,7 +110,7 @@ object StoreAgingProbe {
           maint(i)
           stores.foreach { p =>
             if (java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
-              KeyedParquetStore.compact(spark, p, targetFiles = 1)
+              KeyedParquetStore.compact(spark, p)
           }
         }
         val maintSec = if (maintained) (System.nanoTime() - tm) / 1e9 else 0.0

@@ -213,10 +213,9 @@ object IncrementalIvf {
     // collapse-shuffled once per consumer (measured at r19: 3 full
     // store scans per retrain, q99's Lloyd/seed jobs at 25–27 tasks
     // each vs 1–3 post-pin). One materialization, everything downstream
-    // reads the checkpoint. Width stays on the write-planning window's
-    // existing knobs (writePartitions / aqeWrites) — retrain is a
-    // maintenance op whose deployment-scale story those knobs already
-    // own; pinning does not change it, only the number of passes.
+    // reads the checkpoint. Width stays the write-planning window's
+    // (one shuffle partition); pinning changes only the number of
+    // passes, not the width.
     val corpus = graft.Pin.ser(assigned
       .groupBy(col("neighbor_id"))
       .agg(max(struct(col("iv"), col("batch"), col("cv"))).as("w"))

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.operators.CoreOps
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -55,6 +55,7 @@ object Snapshots {
         col("r.name").as("name"))
 }
 
+
 /** Last-write-wins keyed parquet store: the engine-level replacement for
   * the reference's `INSERT OR REPLACE` SQLite tables (S6/S7,
   * `database_manager.py:34-44`). Plain parquet (no Delta jars in this
@@ -75,11 +76,20 @@ object Snapshots {
   *    date-ranged reads prune at the file listing level (verified in
   *    SourcesSpec via the plan's PartitionFilters); the last-wins dedup is
   *    one hash shuffle on the PK over the affected partitions only.
+  *
+  * Every write (`upsert`, `compact`, `replace`, `deleteMatching`) runs
+  * the one commit protocol in [[locked]]: writer lock, write planning,
+  * heal, then stage → ownership re-check → swap through [[Writer]].
   */
 object KeyedParquetStore {
 
   private def fs(spark: SparkSession, path: String): FileSystem =
     new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** A writer lock whose mtime stops advancing for this long is presumed
+    * crashed and taken over (see [[upsert]]); the heartbeat refreshes a
+    * live writer's lock every third of it. */
+  private val LockTtlMs = 10L * 60 * 1000
 
   /** Read the store if present. Heals a crashed swap — BOTH shapes:
     *
@@ -99,8 +109,9 @@ object KeyedParquetStore {
     * reader would "recover" the writer's legitimately displaced
     * partitions mid-swap. If a live writer holds the lock, the acquire
     * fails and recovery is simply left to that writer, which heals under
-    * its own lock before merging. */
-  /** `schema`: optional KNOWN-SCHEMA fast path. The default read infers
+    * its own lock before merging.
+    *
+    * `schema`: optional KNOWN-SCHEMA fast path. The default read infers
     * the store schema by MERGING every file's footer — correct after
     * additive evolution, but a distributed job whose cost grows with the
     * store's file count, paid on every read. A caller that knows the
@@ -111,21 +122,12 @@ object KeyedParquetStore {
     * must be current (a column the files don't have reads as null; a
     * TYPE mismatch errors at scan time — fail-loud, never silent). */
   def read(spark: SparkSession, path: String,
-           lockTtlMs: Long = 10L * 60 * 1000,
            schema: Option[StructType] = None): Option[DataFrame] = {
     val f = fs(spark, path)
-    if (f.exists(new HPath(path + ".old"))) {
-      try {
-        val h = acquireLock(f, new HPath(path + ".lock"), lockTtlMs)
-        try heal(f, path) finally h.release()
-      } catch { case _: IllegalStateException => () } // live writer: it heals
-    }
-    if (f.exists(new HPath(path)))
-      Some(schema match {
-        case Some(s) => spark.read.schema(s).parquet(path)
-        case None => spark.read.option("mergeSchema", "true").parquet(path)
-      })
-    else None
+    if (f.exists(new HPath(path + ".old")))
+      try locked(spark, path)(_ => ()) // locked() heals
+      catch { case _: IllegalStateException => () } // live writer: it heals
+    if (f.exists(new HPath(path))) Some(load(spark, path, schema)) else None
   }
 
   /** [[read]] with the MISSING store surfaced as its EMPTY relation —
@@ -135,11 +137,18 @@ object KeyedParquetStore {
     * schema should see "no rows yet", not a crash (r13 edge-corpus gate:
     * the IVF/BM25 search faces died here on an empty corpus). Requires
     * the schema precisely because a store with no files carries none. */
-  def readOrEmpty(spark: SparkSession, path: String, schema: StructType,
-                  lockTtlMs: Long = 10L * 60 * 1000): DataFrame =
-    read(spark, path, lockTtlMs, Some(schema)).getOrElse(
+  def readOrEmpty(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    read(spark, path, Some(schema)).getOrElse(
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
+
+  /** The store (or one directory of it) as a relation: with a known
+    * schema, or by merging every file's footer (see [[read]]). */
+  private def load(spark: SparkSession, path: String,
+                   schema: Option[StructType]): DataFrame = schema match {
+    case Some(s) => spark.read.schema(s).parquet(path)
+    case None => spark.read.option("mergeSchema", "true").parquet(path)
+  }
 
   private def heal(f: FileSystem, path: String): Unit = {
     val target = new HPath(path)
@@ -183,15 +192,16 @@ object KeyedParquetStore {
     * rename swaps would not be serializable, so a concurrent upsert FAILS
     * FAST instead. The lock carries a per-acquisition UUID token (so only
     * its owner releases it) and is HEARTBEAT-refreshed while the merge
-    * runs, so `lockTtlMs` means "writer died", not "writer is slow" — a
-    * legitimate merge running past the ttl keeps its lock. A lock whose
-    * mtime stops advancing for `lockTtlMs` is presumed crashed and taken
-    * over by atomic RENAME (never delete-then-create: exactly one
+    * runs, so the ten-minute ttl means "writer died", not "writer is
+    * slow" — a legitimate merge running past the ttl keeps its lock. A
+    * lock whose mtime stops advancing for the ttl is presumed crashed and
+    * taken over by atomic RENAME (never delete-then-create: exactly one
     * contender wins the rename, and a fresh-after-all lock is renamed
     * straight back). Advisory = honest on HDFS/local; object stores
     * without atomic create/rename downgrade it to best-effort — there, a
-    * Delta-style log is the real answer. */
-  /** `partitionValues`: optional hint — the partition-value tuples
+    * Delta-style log is the real answer.
+    *
+    * `partitionValues`: optional hint — the partition-value tuples
     * (aligned to `partitionCols`) that `incoming` is known to contain.
     * A daily ingest knows its date and a batch ingest its batch id
     * statically; passing them skips the `distinct().collect()` job the
@@ -201,22 +211,25 @@ object KeyedParquetStore {
     * corruption; a hint that MISSES a partition present in `incoming`
     * would leave that partition's old rows unmerged — the hint must
     * cover incoming, which is trivially true for the
-    * one-batch-per-partition ingest shape it exists for. */
-  /** `incomingUnique`: caller vouches `incoming` already holds AT MOST ONE
+    * one-batch-per-partition ingest shape it exists for.
+    *
+    * `incomingUnique`: caller vouches `incoming` already holds AT MOST ONE
     * row per `keys` tuple (true by construction for derived relations like
     * band/shingle indexes — a minhash aggregation emits one row per
     * (doc, band)). The merge then skips the latest-per-key window over
     * `incoming` — one whole shuffle stage per upsert on the ingest hot
     * path. A false vouch stores duplicate keys; the contract is the
-    * caller's to honor, exactly like `partitionValues`. */
-  /** `schema`: optional KNOWN-SCHEMA fast path for the MERGE read — the
+    * caller's to honor, exactly like `partitionValues`.
+    *
+    * `schema`: optional KNOWN-SCHEMA fast path for the MERGE read — the
     * same contract as [[read]]'s schema parameter: when the merge path
     * must read the store back (retried batch, overlapping partitions),
     * a caller that knows the store's current schema skips mergeSchema's
     * store-sized footer job. Evolution-safe the same way (pre-evolution
     * files null-fill; type mismatches fail loud at scan). Ignored on
-    * the append fast path, which never reads the store. */
-  /** KEYS↔PARTITION CONTRACT: the last-wins merge is PARTITION-SCOPED —
+    * the append fast path, which never reads the store.
+    *
+    * KEYS↔PARTITION CONTRACT: the last-wins merge is PARTITION-SCOPED —
     * a key is deduplicated only against rows in the partitions the
     * batch touches. A key tuple must therefore always map to the same
     * partition tuple (keys functionally determine `partitionCols`), or
@@ -231,20 +244,88 @@ object KeyedParquetStore {
   def upsert(spark: SparkSession, path: String, incoming: DataFrame,
              keys: Seq[String], version: Seq[Column],
              partitionCols: Seq[String] = Nil,
-             lockTtlMs: Long = 10L * 60 * 1000,
              partitionValues: Seq[Seq[Any]] = Nil,
              incomingUnique: Boolean = false,
              schema: Option[StructType] = None): Unit = {
     require(partitionValues.isEmpty ||
       partitionValues.forall(_.length == partitionCols.length),
       "each partitionValues tuple must align with partitionCols")
-    val f = fs(spark, path)
-    val h = acquireLock(f, new HPath(path + ".lock"), lockTtlMs)
-    try withWritePlanning(spark) {
-      doUpsert(spark, f, path, incoming, keys, version, partitionCols,
-        partitionValues, incomingUnique, h, schema)
+    locked(spark, path) { w =>
+      verifyVouches(incoming, keys, partitionCols, partitionValues, incomingUnique)
+      def dedupIncoming: DataFrame =
+        if (incomingUnique) incoming
+        else CoreOps.latestPerGroup(incoming, keys.map(col), version.map(_.desc))
+      val storeExists = w.exists
+      // LAZY on purpose: building this DataFrame runs mergeSchema's
+      // distributed footer job over EVERY file in the store (needed after
+      // additive evolution — partitions written before a new column lack it
+      // in their footers, and a single-footer sample would silently drop the
+      // column from the merge). The append fast path below must not pay
+      // that store-sized cost, so the read only happens on paths that merge
+      // — and a caller-supplied known schema skips the footer job even
+      // there (the read()-schema contract).
+      lazy val existing = load(spark, path, schema)
+
+      if (partitionCols.isEmpty || !storeExists) {
+        // Full write: first load, or an unpartitioned store (small dims).
+        // A partitioned first write of zero rows leaves the store absent
+        // (commitWhole's empty truth): an idle first micro-batch of a
+        // partitioned upsertStream is the no-op it looks like.
+        w.stage(
+          if (storeExists) CoreOps.upsertLastWins(existing, incoming, keys, version)
+          else dedupIncoming,
+          partitionCols)
+        w.commitWhole(partitionCols)
+      } else {
+        // Partition-scoped merge: only partitions present in `incoming` are
+        // read back, merged, and rewritten. The tuple set comes from the
+        // caller's hint when it has one (the ingest shape knows its batch/
+        // date statically — no discovery job), else from a distinct-collect
+        // bounded by the ingest batch (e.g. one date), not the store. An
+        // empty batch (e.g. an idle stream trigger) is done: a no-op.
+        val tuples = partitionTuples("upsert", incoming, partitionCols, partitionValues)
+        // APPEND FAST PATH: when every affected partition directory is NEW,
+        // there is nothing to merge — skip the store read-back (and its
+        // mergeSchema footer pass) entirely and stage `incoming` directly.
+        // This is the append-only ingest shape (one fresh batch/date
+        // partition per call): at scale it turns each ingest upsert into
+        // ONE write job plus renames, no matter how large the store grows.
+        // Values outside the plain rendering fall back to the merge path
+        // (see plainRels) — a missed existing dir would silently drop its
+        // rows, so the guard errs toward merging.
+        val done = tuples.isEmpty || plainRels(partitionCols, tuples).exists { probed =>
+          probed.forall(rel => !w.f.exists(new HPath(s"$path/$rel"))) && {
+            w.stage(dedupIncoming, partitionCols)
+            // RENDERING GUARD: the probe above used the hint values' string
+            // form; if Spark's writer rendered any partition differently
+            // (e.g. an Int 1 hint against a column whose values print "01"),
+            // the "new" verdict is unsound — that directory may exist under
+            // its true name and a swap would displace it UNMERGED. Compare
+            // the staged directory names (ground truth) against the probed
+            // set; on any mismatch abandon the staging and fall back to the
+            // merge path, which reads and merges by VALUE, not by rendering.
+            if (w.staged(partitionCols.length).forall { case (_, rel) => probed.contains(rel) }) {
+              w.commitPartitions(partitionCols.length)
+              true
+            } else {
+              w.f.delete(new HPath(w.staging), true)
+              false
+            }
+          }
+        }
+        if (!done) {
+          // Partition-value directory names round-trip through type inference
+          // on read (e.g. '2024-01-03' comes back as DATE); align the read
+          // side to incoming's dtypes so the union resolves.
+          val affected = partitionCols.foldLeft(
+            existing.filter(tuplePredicate(partitionCols, tuples))) { (df, c) =>
+            df.withColumn(c, col(c).cast(incoming.schema(c).dataType))
+          }
+          w.stage(CoreOps.upsertLastWins(affected, incoming, keys, version), partitionCols)
+          w.commitPartitions(partitionCols.length)
+        }
+      }
     }
-    finally h.release()
   }
 
   private def readToken(f: FileSystem, lock: HPath): Option[String] =
@@ -454,35 +535,19 @@ object KeyedParquetStore {
     new LockHandle(f, lock, token, ttlMs)
   }
 
-  /** Opt-in verification of the two caller-vouched contracts on the
-    * ingest hot path — enable with `spark.graft.store.debugChecks=true`
-    * (session conf). OFF (the default) costs zero extra Spark jobs; ON it
-    * spends one bounded job per vouch to turn a silent contract violation
-    * (duplicate keys stored / old partition rows dropped unmerged) into a
-    * fail-fast at the offending call site. Meant for specs and staging
-    * runs, not the production ingest loop. */
   /** THE definition of the opt-in verification gate — every caller-vouched
     * contract in the store AND the incremental-index modules keys off this
     * one conf flag, through this one predicate (a drifted copy of the
-    * literal would silently disable one guard while the others fire). */
+    * literal would silently disable one guard while the others fire).
+    * Enable with `spark.graft.store.debugChecks=true` (session conf). OFF
+    * (the default) costs zero extra Spark jobs; ON it spends one bounded
+    * job per vouch to turn a silent contract violation (duplicate keys
+    * stored / old partition rows dropped unmerged) into a fail-fast at the
+    * offending call site. Meant for specs and staging runs, not the
+    * production ingest loop. */
   private[graft] def debugChecksOn(spark: SparkSession): Boolean =
     spark.conf.getOption("spark.graft.store.debugChecks").contains("true")
 
-  /** Run `body` with adaptive query execution OFF, restoring the
-    * caller's setting after. Store write/maintenance actions are
-    * micro-batch-sized by design, and AQE materializes every exchange in
-    * such a plan as its own scheduled job with its own re-plan and
-    * codegen pass — JobProbe (r10) attributed 24 of q71's 29 per-ingest
-    * jobs to AQE query-stage materializations inside store writes. For
-    * KB–MB plans those per-job round-trips dominate anything runtime
-    * re-planning could save, so the ingest path opts out; a deployment
-    * whose ingest batches are large enough to want AQE's skew/coalesce
-    * handling sets `spark.graft.store.aqeWrites=true` (session conf) and
-    * this wrapper becomes a no-op. Re-entrant (nested windows restore
-    * correctly). SESSION-scoped, not thread-scoped: an unrelated query
-    * planned on the same session during the window also skips AQE — it
-    * loses runtime re-planning, never correctness; the store's writer
-    * lock already serializes the writers themselves. */
   /** Per-session depth counter for [[withWritePlanning]]: the conf keys
     * are SESSION state, so overlapping windows from two writer threads
     * (different stores — same-store writers are already lock-serialized)
@@ -495,41 +560,139 @@ object KeyedParquetStore {
   private val planningStates = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, PlanningState]())
 
-  private[graft] def withWritePlanning[T](spark: SparkSession)(body: => T): T =
-    if (spark.conf.getOption("spark.graft.store.aqeWrites").contains("true")) body
-    else {
-      // AQE-off ALONE is measured slower here (r11): it drops the
-      // per-stage jobs but loses partition coalescing, so every KB-sized
-      // shuffle reads back at the session's full partition count and the
-      // store files multiply. The pair below is what wins: no AQE stage
-      // jobs AND statically write-sized shuffles. `writePartitions`
-      // (default 1) sizes the ingest-path shuffles — micro-batches are
-      // KB–MB by this module's contract; a deployment feeding larger
-      // batches raises it (or re-enables aqeWrites); bulk BACKFILLS
-      // belong on the one-shot builders, which keep full parallelism.
-      // Measured (r11, q49+q71+q72 at the bench config): 12.5 s → 10.4 s,
-      // jobs 47/29/44 → 26/21/30; AQE-off without the partition pin was
-      // SLOWER than stock (16.8 s) — both halves are load-bearing.
-      val keys = Seq("spark.sql.adaptive.enabled" -> "false",
-        "spark.sql.shuffle.partitions" ->
-          spark.conf.getOption("spark.graft.store.writePartitions").getOrElse("1"))
-      val st = planningStates.computeIfAbsent(spark, _ => PlanningState(0, Nil))
-      st.synchronized {
-        if (st.depth == 0) {
-          st.saved = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-          keys.foreach { case (k, v) => spark.conf.set(k, v) }
-        }
-        st.depth += 1
+  // AQE-off ALONE is measured slower here (r11): it drops the per-stage
+  // jobs but loses partition coalescing, so every KB-sized shuffle reads
+  // back at the session's full partition count and the store files
+  // multiply. The pair below is what wins: no AQE stage jobs AND
+  // statically write-sized shuffles. One shuffle partition sizes the
+  // ingest-path shuffles — micro-batches are KB–MB by this module's
+  // contract; bulk BACKFILLS belong on the one-shot builders, which keep
+  // full parallelism. Measured (r11, q49+q71+q72 at the bench config):
+  // 12.5 s → 10.4 s, jobs 47/29/44 → 26/21/30; AQE-off without the
+  // partition pin was SLOWER than stock (16.8 s) — both halves are
+  // load-bearing.
+  private val writePlanning = Seq(
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.shuffle.partitions" -> "1")
+
+  /** Run `body` with adaptive query execution OFF and one shuffle
+    * partition, restoring the caller's settings after. Store
+    * write/maintenance actions are micro-batch-sized by design, and AQE
+    * materializes every exchange in such a plan as its own scheduled job
+    * with its own re-plan and codegen pass — JobProbe (r10) attributed 24
+    * of q71's 29 per-ingest jobs to AQE query-stage materializations
+    * inside store writes. For KB–MB plans those per-job round-trips
+    * dominate anything runtime re-planning could save, so the ingest path
+    * opts out. Re-entrant (nested windows restore correctly).
+    * SESSION-scoped, not thread-scoped: an unrelated query planned on the
+    * same session during the window also skips AQE — it loses runtime
+    * re-planning, never correctness; the store's writer lock already
+    * serializes the writers themselves. */
+  private[graft] def withWritePlanning[T](spark: SparkSession)(body: => T): T = {
+    val st = planningStates.computeIfAbsent(spark, _ => PlanningState(0, Nil))
+    st.synchronized {
+      if (st.depth == 0) {
+        st.saved = writePlanning.map { case (k, _) => k -> spark.conf.getOption(k) }
+        writePlanning.foreach { case (k, v) => spark.conf.set(k, v) }
       }
-      try body
-      finally st.synchronized {
-        st.depth -= 1
-        if (st.depth == 0) st.saved.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
-        }
+      st.depth += 1
+    }
+    try body
+    finally st.synchronized {
+      st.depth -= 1
+      if (st.depth == 0) st.saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
       }
     }
+  }
+
+  /** THE commit protocol, shared by every write and by [[read]]'s heal:
+    * take the writer lock, open the write-planning window, heal a crashed
+    * predecessor's swap and clear its staging, then run `body` on the
+    * held store. We hold the writer lock: no other swap can be in flight,
+    * so any displaced dirs are a crashed predecessor's — heal before
+    * merging (read() alone would skip healing under our own fresh lock). */
+  private def locked[T](spark: SparkSession, path: String)(body: Writer => T): T = {
+    val f = fs(spark, path)
+    val owner = acquireLock(f, new HPath(path + ".lock"), LockTtlMs)
+    try withWritePlanning(spark) {
+      heal(f, path)
+      val w = new Writer(f, path, owner)
+      f.delete(new HPath(w.staging), true)
+      body(w)
+    } finally owner.release()
+  }
+
+  /** The store at `path` while [[locked]] holds its writer lock. Every
+    * store mutation goes stage → swap: [[stage]] is the only staged write
+    * and re-checks ownership after it, so no swap or delete can follow a
+    * lost lock. */
+  private final class Writer(val f: FileSystem, val path: String, owner: LockHandle) {
+    val staging: String = path + ".staging"
+
+    def exists: Boolean = f.exists(new HPath(path))
+
+    /** Write `df` into staging (at `rel` below it), partitioned by
+      * `partitionCols` when given, then re-check lock ownership. */
+    def stage(df: DataFrame, partitionCols: Seq[String], rel: String = ""): Unit = {
+      val writer = df.write.mode(SaveMode.Overwrite)
+      (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
+        .parquet(under(staging, rel))
+      owner.assertStillOwned()
+    }
+
+    /** Swap the staged whole store in. A PARTITIONED write of zero rows
+      * stages no files at all (only _SUCCESS) — swapping it in would
+      * create a store that "exists" but cannot be read (no footer to
+      * infer from), wedging every later mergeSchema read and merge. So
+      * that empty truth renders as an ABSENT store instead. (Unpartitioned
+      * empty writes stage a real schema-carrying file and stay full swaps
+      * — an empty store that reads back empty.) */
+    def commitWhole(partitionCols: Seq[String]): Unit =
+      if (partitionCols.nonEmpty && !hasData(f, staging)) {
+        f.delete(new HPath(staging), true)
+        f.delete(new HPath(path), true)
+        ()
+      } else swapRel("")
+
+    /** Partition dirs the staged write produced, with their paths
+      * relative to staging. */
+    def staged(depth: Int): Seq[(HPath, String)] =
+      relDirs(f, staging, partitionDirs(f, new HPath(staging), depth))
+
+    /** Swap exactly the partition directories the staging write produced
+      * (its output contains only affected partitions) — names are taken
+      * from the listing, so value escaping never needs re-deriving.
+      * Displaced pre-images go under `path + ".old"/<rel>` — OUTSIDE the
+      * store root, so a crash mid-swap can never leave a `date=X.old`
+      * directory where Spark's partition discovery would choke on it;
+      * `read` restores or drops them (see healDisplaced). */
+    def commitPartitions(depth: Int): Unit = {
+      staged(depth).foreach { case (dir, rel) =>
+        require(rel.nonEmpty && !rel.contains(":"),
+          s"unexpected staging partition dir $dir under ${f.makeQualified(new HPath(staging))}")
+        f.mkdirs(new HPath(s"$path/$rel").getParent)
+        swapRel(rel)
+      }
+      cleanup()
+    }
+
+    /** Checked swap of staging's `rel` (the root when empty) into the
+      * store, displacing the live copy to the same `rel` under `.old`. */
+    def swapRel(rel: String): Unit =
+      swap(f, new HPath(under(staging, rel)), new HPath(under(path, rel)),
+        new HPath(under(path + ".old", rel)))
+
+    def cleanup(): Unit = {
+      f.delete(new HPath(staging), true)
+      f.delete(new HPath(path + ".old"), true)
+      ()
+    }
+
+    private def under(base: String, rel: String): String =
+      if (rel.isEmpty) base else s"$base/$rel"
+  }
 
   private def verifyVouches(incoming: DataFrame, keys: Seq[String],
                             partitionCols: Seq[String],
@@ -558,210 +721,78 @@ object KeyedParquetStore {
     }
   }
 
-  private def doUpsert(spark: SparkSession, f: FileSystem, path: String,
-                       incoming: DataFrame, keys: Seq[String], version: Seq[Column],
-                       partitionCols: Seq[String],
-                       partitionValues: Seq[Seq[Any]] = Nil,
-                       incomingUnique: Boolean = false,
-                       owner: LockHandle,
-                       knownSchema: Option[StructType] = None): Unit = {
-    def dedupIncoming(df: DataFrame): DataFrame =
-      if (incomingUnique) df
-      else CoreOps.latestPerGroup(df, keys.map(col), version.map(_.desc))
-    // We hold the writer lock: no other swap can be in flight, so any
-    // displaced dirs are a crashed predecessor's — heal before merging
-    // (read() alone would skip healing under our own fresh lock).
-    heal(f, path)
-    verifyVouches(incoming, keys, partitionCols, partitionValues, incomingUnique)
-    val storeExists = f.exists(new HPath(path))
-    // LAZY on purpose: building this DataFrame runs mergeSchema's
-    // distributed footer job over EVERY file in the store (needed after
-    // additive evolution — partitions written before a new column lack it
-    // in their footers, and a single-footer sample would silently drop the
-    // column from the merge). The append fast path below must not pay
-    // that store-sized cost, so the read only happens on paths that merge
-    // — and a caller-supplied known schema skips the footer job even
-    // there (the read()-schema contract).
-    lazy val existing = knownSchema match {
-      case Some(s) => spark.read.schema(s).parquet(path)
-      case None => spark.read.option("mergeSchema", "true").parquet(path)
-    }
-    val staging = path + ".staging"
-    f.delete(new HPath(staging), true)
-
-    if (partitionCols.isEmpty || !storeExists) {
-      // Full write: first load, or an unpartitioned store (small dims).
-      val merged =
-        if (storeExists) CoreOps.upsertLastWins(existing, incoming, keys, version)
-        else dedupIncoming(incoming)
-      val writer = merged.write.mode(SaveMode.Overwrite)
-      (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
-        .parquet(staging)
-      // A PARTITIONED write of zero rows stages no files at all (only
-      // _SUCCESS) — swapping it in would create a store that "exists"
-      // but cannot be read (no footer to infer from), wedging every
-      // later mergeSchema read and merge. An idle first micro-batch of
-      // a partitioned upsertStream hits exactly this; treat it as the
-      // no-op it is. (Unpartitioned empty writes stage a real
-      // schema-carrying file and stay full swaps — an empty store that
-      // reads back empty.)
-      if (partitionCols.nonEmpty && !stagedHasData(f, staging)) {
-        f.delete(new HPath(staging), true)
-        return
-      }
-      owner.assertStillOwned()
-      swap(f, new HPath(staging), new HPath(path), new HPath(path + ".old"))
-    } else {
-      // Partition-scoped merge: only partitions present in `incoming` are
-      // read back, merged, and rewritten. The tuple set comes from the
-      // caller's hint when it has one (the ingest shape knows its batch/
-      // date statically — no discovery job), else from a distinct-collect
-      // bounded by the ingest batch (e.g. one date), not the store.
-      val tuples: Seq[Seq[Any]] =
-        if (partitionValues.nonEmpty) partitionValues
-        else incoming.select(partitionCols.map(col): _*).distinct().collect()
-          .toSeq.map(r => (0 until r.length).map(r.get))
-      if (tuples.isEmpty) return // empty batch (e.g. an idle stream trigger): no-op
-      require(tuples.forall(_.forall(_ != null)),
-        "null partition values are not supported by the partition-scoped upsert")
-      // APPEND FAST PATH: when every affected partition directory is NEW,
-      // there is nothing to merge — skip the store read-back (and its
-      // mergeSchema footer pass) entirely and stage `incoming` directly.
-      // This is the append-only ingest shape (one fresh batch/date
-      // partition per call): at scale it turns each ingest upsert into
-      // ONE write job plus renames, no matter how large the store grows.
-      // Partition directory names are only predictable when the value's
-      // string form needs none of Spark's path escaping, so anything
-      // outside [A-Za-z0-9._-] conservatively falls back to the merge
-      // path — a false "exists" is never possible from that guard alone;
-      // a missed existing dir would silently drop its rows, so the guard
-      // errs toward merging.
-      val plainForm = tuples.forall(_.forall { v =>
-        val s = v.toString
-        s.nonEmpty && s.forall(c => c.isLetterOrDigit && c < 128 || "-_.".contains(c))
-      })
-      val probedRels = tuples.map { t =>
-        partitionCols.zip(t).map { case (c, v) => s"$c=$v" }.mkString("/")
-      }
-      val allNew = plainForm &&
-        probedRels.forall(rel => !f.exists(new HPath(s"$path/$rel")))
-      val fastPathDone = allNew && {
-        dedupIncoming(incoming)
-          .write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(staging)
-        // RENDERING GUARD: the probe above used the hint values' string
-        // form; if Spark's writer rendered any partition differently
-        // (e.g. an Int 1 hint against a column whose values print "01"),
-        // the "new" verdict is unsound — that directory may exist under
-        // its true name and a swap would displace it UNMERGED. Compare
-        // the staged directory names (ground truth) against the probed
-        // set; on any mismatch abandon the staging and fall back to the
-        // merge path, which reads and merges by VALUE, not by rendering.
-        val stagingQ = f.makeQualified(new HPath(staging)).toString
-        val stagedRels = partitionDirs(f, new HPath(staging), partitionCols.length)
-          .map(d => f.makeQualified(d).toString.stripPrefix(stagingQ).stripPrefix("/"))
-        val probed = probedRels.toSet
-        if (stagedRels.forall(probed.contains)) {
-          owner.assertStillOwned()
-          swapStagedPartitions(spark, f, path, staging, partitionCols.length)
-          true
-        } else {
-          f.delete(new HPath(staging), true)
-          false
-        }
-      }
-      if (fastPathDone) return
-      val pred = tuples.map { t =>
-        partitionCols.zip(t)
-          .map { case (c, v) => col(c) === lit(v) }
-          .reduce(_ && _)
-      }.reduce(_ || _)
-      // Partition-value directory names round-trip through type inference
-      // on read (e.g. '2024-01-03' comes back as DATE); align the read
-      // side to incoming's dtypes so the union resolves.
-      val affected = partitionCols.foldLeft(existing.filter(pred)) { (df, c) =>
-        df.withColumn(c, col(c).cast(incoming.schema(c).dataType))
-      }
-      val merged = CoreOps.upsertLastWins(affected, incoming, keys, version)
-      merged.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(staging)
-      owner.assertStillOwned()
-      swapStagedPartitions(spark, f, path, staging, partitionCols.length)
-    }
+  /** The partition-value tuples a partition-scoped `op` touches: the
+    * caller's `hint` when given, else the distinct tuples of `df` (one
+    * collect bounded by the partitions hit, never the store). */
+  private def partitionTuples(op: String, df: DataFrame, partitionCols: Seq[String],
+                              hint: Seq[Seq[Any]] = Nil): Seq[Seq[Any]] = {
+    val tuples =
+      if (hint.nonEmpty) hint
+      else df.select(partitionCols.map(col): _*).distinct().collect()
+        .toSeq.map(r => (0 until r.length).map(r.get))
+    require(tuples.forall(_.forall(_ != null)),
+      s"null partition values are not supported by the partition-scoped $op")
+    tuples
   }
 
-  /** Swap exactly the partition directories the staging write produced
-    * (its output contains only affected partitions) — names are taken
-    * from the listing, so value escaping never needs re-deriving.
-    * Qualify both roots: listStatus returns fully-qualified URIs.
-    * Displaced pre-images go under `path + ".old"/<rel>` — OUTSIDE the
-    * store root, so a crash mid-swap can never leave a `date=X.old`
-    * directory where Spark's partition discovery would choke on it;
-    * `read` restores or drops them (see healDisplaced). */
-  private def swapStagedPartitions(spark: SparkSession, f: FileSystem,
-                                   path: String, staging: String,
-                                   depth: Int): Unit = {
-    val stagingQ = f.makeQualified(new HPath(staging)).toString
-    val pathQ = f.makeQualified(new HPath(path)).toString
-    partitionDirs(f, new HPath(staging), depth).foreach { dir =>
-      val rel = f.makeQualified(dir).toString.stripPrefix(stagingQ).stripPrefix("/")
-      require(rel.nonEmpty && !rel.contains(":"),
-        s"unexpected staging partition dir $dir under $stagingQ")
-      val target = new HPath(s"$pathQ/$rel")
-      f.mkdirs(target.getParent)
-      swap(f, dir, target, new HPath(s"$pathQ.old/$rel"))
-    }
-    f.delete(new HPath(staging), true)
-    f.delete(new HPath(path + ".old"), true)
-    ()
+  /** The `c=v/…` directory of each tuple, or None unless every value
+    * renders PLAIN. Partition directory names are only predictable when
+    * the value's string form needs none of Spark's path escaping, so
+    * anything outside [A-Za-z0-9._-] makes the caller fall back to a path
+    * that works by VALUE, not by rendering — a false "exists" is never
+    * possible from this guard alone. */
+  private def plainRels(partitionCols: Seq[String],
+                        tuples: Seq[Seq[Any]]): Option[Seq[String]] = {
+    val plain = tuples.forall(_.forall { v =>
+      val s = v.toString
+      s.nonEmpty && s.forall(c => c.isLetterOrDigit && c < 128 || "-_.".contains(c))
+    })
+    if (!plain) None
+    else Some(tuples.map { t =>
+      partitionCols.zip(t).map { case (c, v) => s"$c=$v" }.mkString("/")
+    })
   }
+
+  /** Rows of any of `tuples`: the partition-pruning filter of a scoped
+    * read-back. */
+  private def tuplePredicate(partitionCols: Seq[String], tuples: Seq[Seq[Any]]): Column =
+    tuples.map { t =>
+      partitionCols.zip(t)
+        .map { case (c, v) => col(c) === lit(v) }
+        .reduce(_ && _)
+    }.reduce(_ || _)
 
   /** Compact fragmented partitions: every merge leaves up to one file per
     * write task, and an APPEND-ONLY partitioned store (the incremental-
     * dedup band index is the canonical case — one `batch=N` partition per
     * ingest) accumulates a small-file population that hurts scan planning,
     * listing, and read parallelism long before data volume does. This
-    * rewrites ONLY the partition directories holding more than
-    * `targetFiles` data files, coalescing each to `targetFiles`, under the
-    * same writer lock + staged-swap machinery as `upsert`: readers never
-    * see a partial partition, a crash mid-swap leaves the recoverable
-    * `.old` pre-image (`read` heals it), and a live writer makes the
-    * compaction FAIL FAST instead of racing. Content is bit-identical —
-    * read → coalesce → rewrite, no merge logic runs. Unpartitioned stores
-    * compact the root the same way. Returns the number of directories
-    * rewritten, so schedulers can no-op cheaply (already-compact
-    * partitions cost one listing, zero reads). */
-  def compact(spark: SparkSession, path: String, targetFiles: Int = 1,
-              lockTtlMs: Long = 10L * 60 * 1000): Int = {
-    require(targetFiles >= 1, "targetFiles must be >= 1")
-    val f = fs(spark, path)
-    val h = acquireLock(f, new HPath(path + ".lock"), lockTtlMs)
-    try withWritePlanning(spark) {
-      heal(f, path)
-      if (!f.exists(new HPath(path))) 0
+    * rewrites ONLY the partition directories holding more than one data
+    * file, coalescing each to one, under the same writer lock +
+    * staged-swap machinery as `upsert`: readers never see a partial
+    * partition, a crash mid-swap leaves the recoverable `.old` pre-image
+    * (`read` heals it), and a live writer makes the compaction FAIL FAST
+    * instead of racing. Content is bit-identical — read → coalesce →
+    * rewrite, no merge logic runs. Unpartitioned stores compact the root
+    * the same way. Returns the number of directories rewritten, so
+    * schedulers can no-op cheaply (already-compact partitions cost one
+    * listing, zero reads). */
+  def compact(spark: SparkSession, path: String): Int =
+    locked(spark, path) { w =>
+      if (!w.exists) 0
       else {
-        val staging = path + ".staging"
-        f.delete(new HPath(staging), true)
-        val pathQ = f.makeQualified(new HPath(path)).toString
-        val fragmented = leafDataDirs(f, new HPath(path))
-          .filter(dataFileCount(f, _) > targetFiles)
-        fragmented.foreach { dir =>
-          val rel = f.makeQualified(dir).toString.stripPrefix(pathQ).stripPrefix("/")
-          require(!rel.contains(":"), s"unexpected partition dir $dir under $pathQ")
-          val stagingDir = if (rel.isEmpty) staging else s"$staging/$rel"
-          spark.read.option("mergeSchema", "true").parquet(dir.toString)
-            .coalesce(targetFiles)
-            .write.mode(SaveMode.Overwrite).parquet(stagingDir)
-          val target = if (rel.isEmpty) new HPath(path) else new HPath(s"$pathQ/$rel")
-          val old =
-            if (rel.isEmpty) new HPath(path + ".old") else new HPath(s"$pathQ.old/$rel")
-          h.assertStillOwned()
-          swap(f, new HPath(stagingDir), target, old)
+        val fragmented = relDirs(w.f, path, leafDataDirs(w.f, new HPath(path)))
+          .filter { case (dir, _) => dataFiles(w.f, dir).length > 1 }
+        fragmented.foreach { case (dir, rel) =>
+          require(!rel.contains(":"),
+            s"unexpected partition dir $dir under ${w.f.makeQualified(new HPath(path))}")
+          w.stage(load(spark, dir.toString, None).coalesce(1), Nil, rel)
+          w.swapRel(rel)
         }
-        f.delete(new HPath(staging), true)
-        f.delete(new HPath(path + ".old"), true)
+        w.cleanup()
         fragmented.length
       }
-    } finally h.release()
-  }
+    }
 
   /** Consolidate AGED batch partitions: fold every `batch=` partition
     * not named in `keepBatches` into one `batch=rollup` partition, rows
@@ -828,18 +859,13 @@ object KeyedParquetStore {
       // otherwise never match, silently aging the live horizon into
       // premature O(store) folds (ADVICE r14; data stays correct either
       // way — the relabel below uses real column values).
-      val pathQ = f.makeQualified(new HPath(path)).toString
-      val leaves = leafDataDirs(f, new HPath(path))
-      val perBatch = leaves.flatMap { dir =>
-        val rel = f.makeQualified(dir).toString.stripPrefix(pathQ)
-        rel.split('/').find(_.startsWith("batch=")).map { seg =>
-          val bytes = f.listStatus(dir).filter(_.isFile)
-            .filterNot { s => val n = s.getPath.getName
-              n.startsWith("_") || n.startsWith(".") }
-            .map(_.getLen).sum
-          (org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .unescapePathName(seg.stripPrefix("batch=")), bytes)
-        }
+      val perBatch = relDirs(f, path, leafDataDirs(f, new HPath(path))).flatMap {
+        case (dir, rel) =>
+          rel.split('/').find(_.startsWith("batch=")).map { seg =>
+            (org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+              .unescapePathName(seg.stripPrefix("batch=")),
+              dataFiles(f, dir).map(_.getLen).sum)
+          }
       }.groupMapReduce(_._1)(_._2)(_ + _)
       val aged = perBatch.view
         .filterKeys(b => !keepBatches.contains(b) && b != "rollup").toMap
@@ -876,26 +902,11 @@ object KeyedParquetStore {
     * be read. Absent-after-empty-replace is the consistent rendering of
     * "the new truth is nothing". */
   def replace(spark: SparkSession, path: String, contents: DataFrame,
-              partitionCols: Seq[String] = Nil,
-              lockTtlMs: Long = 10L * 60 * 1000): Unit = {
-    val f = fs(spark, path)
-    val h = acquireLock(f, new HPath(path + ".lock"), lockTtlMs)
-    try withWritePlanning(spark) {
-      heal(f, path)
-      val staging = path + ".staging"
-      f.delete(new HPath(staging), true)
-      val w = contents.write.mode(SaveMode.Overwrite)
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(staging)
-      h.assertStillOwned()
-      if (partitionCols.nonEmpty && !stagedHasData(f, staging)) {
-        f.delete(new HPath(staging), true)
-        f.delete(new HPath(path), true) // empty truth: absent store (see scaladoc)
-        ()
-      } else
-        swap(f, new HPath(staging), new HPath(path), new HPath(path + ".old"))
-    } finally h.release()
-  }
+              partitionCols: Seq[String] = Nil): Unit =
+    locked(spark, path) { w =>
+      w.stage(contents, partitionCols)
+      w.commitWhole(partitionCols)
+    }
 
   /** DELETE every store row whose `on` tuple matches a row of `victims`
     * — the retirement primitive the incremental indexes need for a crawl
@@ -929,122 +940,81 @@ object KeyedParquetStore {
     * (1 for a full rewrite), so schedulers can no-op cheaply. */
   def deleteMatching(spark: SparkSession, path: String, victims: DataFrame,
                      on: Seq[String], partitionCols: Seq[String] = Nil,
-                     lockTtlMs: Long = 10L * 60 * 1000,
                      schema: Option[StructType] = None): Int = {
     require(on.nonEmpty, "deleteMatching needs at least one match column")
-    val f = fs(spark, path)
-    if (!f.exists(new HPath(path))) return 0 // absent store: nothing to delete
-    val h = acquireLock(f, new HPath(path + ".lock"), lockTtlMs)
-    try withWritePlanning(spark) {
-      heal(f, path)
-      if (!f.exists(new HPath(path))) 0
+    if (!fs(spark, path).exists(new HPath(path))) return 0 // absent store: nothing to delete
+    locked(spark, path) { w =>
+      if (!w.exists) 0
       else {
-        val existing = schema match {
-          case Some(sc) => spark.read.schema(sc).parquet(path)
-          case None => spark.read.option("mergeSchema", "true").parquet(path)
-        }
+        val existing = load(spark, path, schema)
         // distinct: victims at natural grain (e.g. one doc id retiring
         // many band rows) must not fan the anti-join's build side out
         val vict = victims.select(on.map(col): _*).distinct()
-        val staging = path + ".staging"
-        f.delete(new HPath(staging), true)
 
         def fullRewrite(): Int = {
-          val remaining = existing.join(vict, on, "left_anti")
-          val w = remaining.write.mode(SaveMode.Overwrite)
-          (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-            .parquet(staging)
-          h.assertStillOwned()
-          if (partitionCols.nonEmpty && !stagedHasData(f, staging)) {
-            f.delete(new HPath(staging), true)
-            f.delete(new HPath(path), true) // empty truth: absent store
-          } else
-            swap(f, new HPath(staging), new HPath(path), new HPath(path + ".old"))
+          w.stage(existing.join(vict, on, "left_anti"), partitionCols)
+          w.commitWhole(partitionCols)
           1
         }
 
         if (partitionCols.isEmpty) fullRewrite()
         else {
           // Only partitions holding victim rows — bounded by partitions
-          // hit, not store size (the doUpsert discovery shape).
-          val tuples: Seq[Seq[Any]] = existing.join(vict, on, "left_semi")
-            .select(partitionCols.map(col): _*).distinct().collect()
-            .toSeq.map(r => (0 until r.length).map(r.get))
+          // hit, not store size (the upsert discovery shape).
+          val tuples = partitionTuples("delete",
+            existing.join(vict, on, "left_semi"), partitionCols)
           if (tuples.isEmpty) 0
-          else {
-            require(tuples.forall(_.forall(_ != null)),
-              "null partition values are not supported by the partition-scoped delete")
-            val plainForm = tuples.forall(_.forall { v =>
-              val s = v.toString
-              s.nonEmpty && s.forall(c => c.isLetterOrDigit && c < 128 || "-_.".contains(c))
-            })
-            if (!plainForm) fullRewrite()
-            else {
-              val pred = tuples.map { t =>
-                partitionCols.zip(t)
-                  .map { case (c, v) => col(c) === lit(v) }
-                  .reduce(_ && _)
-              }.reduce(_ || _)
-              val remaining = existing.filter(pred).join(vict, on, "left_anti")
-              remaining.write.mode(SaveMode.Overwrite)
-                .partitionBy(partitionCols: _*).parquet(staging)
-              h.assertStillOwned()
-              val expectedRels = tuples.map { t =>
-                partitionCols.zip(t).map { case (c, v) => s"$c=$v" }.mkString("/")
-              }
-              val stagingQ = f.makeQualified(new HPath(staging)).toString
-              val stagedRels =
-                if (!stagedHasData(f, staging)) Set.empty[String]
-                else partitionDirs(f, new HPath(staging), partitionCols.length)
-                  .map(d => f.makeQualified(d).toString
-                    .stripPrefix(stagingQ).stripPrefix("/")).toSet
-              // plainForm holds, so the staged renderings equal the "$c=$v"
-              // forms — a rel in expected but not staged is a partition
+          else plainRels(partitionCols, tuples) match {
+            case None => fullRewrite()
+            case Some(expected) =>
+              w.stage(existing.filter(tuplePredicate(partitionCols, tuples))
+                .join(vict, on, "left_anti"), partitionCols)
+              // plainRels holds, so the staged renderings equal the
+              // expected ones — an expected rel not staged is a partition
               // whose every row was a victim: delete its live dir (see
               // scaladoc for why not a .old displacement)
-              expectedRels.filterNot(stagedRels.contains).foreach { rel =>
-                f.delete(new HPath(s"$path/$rel"), true)
+              val staged = w.staged(partitionCols.length).map(_._2).toSet
+              expected.filterNot(staged).foreach { rel =>
+                w.f.delete(new HPath(s"$path/$rel"), true)
               }
-              if (stagedRels.nonEmpty)
-                swapStagedPartitions(spark, f, path, staging, partitionCols.length)
-              else f.delete(new HPath(staging), true)
+              w.commitPartitions(partitionCols.length)
               // every partition gone → absent store, the replace() rendering
-              val anyLeft = f.exists(new HPath(path)) &&
-                f.listStatus(new HPath(path)).exists { s =>
-                  val n = s.getPath.getName
-                  !n.startsWith("_") && !n.startsWith(".")
-                }
-              if (!anyLeft) f.delete(new HPath(path), true)
+              if (!w.exists || !hasData(w.f, path)) w.f.delete(new HPath(path), true)
               tuples.size
-            }
           }
         }
       }
-    } finally h.release()
+    }
   }
 
-  /** Did a staged partitioned write produce any DATA entries? A write of
-    * zero rows stages only markers (_SUCCESS) — the one definition of
-    * "empty staging" shared by upsert's no-op and replace's
-    * delete-the-store renderings of an empty truth. */
-  private def stagedHasData(f: FileSystem, staging: String): Boolean =
-    f.listStatus(new HPath(staging)).exists { s =>
-      val n = s.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
+  /** Not a marker or hidden file (`_SUCCESS`, `.crc`, `_temporary`…). */
+  private def isData(s: FileStatus): Boolean = {
+    val n = s.getPath.getName
+    !n.startsWith("_") && !n.startsWith(".")
+  }
+
+  /** Does `dir` hold any DATA entry? A partitioned write of zero rows
+    * stages only markers (_SUCCESS) — the one definition of an empty
+    * staged write and of a store emptied of partitions. */
+  private def hasData(f: FileSystem, dir: String): Boolean =
+    f.listStatus(new HPath(dir)).exists(isData)
+
+  private def dataFiles(f: FileSystem, dir: HPath): Seq[FileStatus] =
+    f.listStatus(dir).toSeq.filter(s => s.isFile && isData(s))
 
   /** Deepest directories holding data files: partition leaves of a
     * partitioned store, or the root itself when unpartitioned. */
   private def leafDataDirs(f: FileSystem, base: HPath): Seq[HPath] = {
-    val dirs = f.listStatus(base).filter(_.isDirectory).toSeq
-      .filterNot { s => val n = s.getPath.getName; n.startsWith("_") || n.startsWith(".") }
+    val dirs = f.listStatus(base).toSeq.filter(s => s.isDirectory && isData(s))
     if (dirs.isEmpty) Seq(base) else dirs.flatMap(s => leafDataDirs(f, s.getPath))
   }
 
-  private def dataFileCount(f: FileSystem, dir: HPath): Int =
-    f.listStatus(dir).count { s =>
-      s.isFile && { val n = s.getPath.getName; !n.startsWith("_") && !n.startsWith(".") }
-    }
+  /** Each of `dirs` (listing URIs, fully qualified) paired with its path
+    * relative to `base`, qualified the same way ("" for `base` itself). */
+  private def relDirs(f: FileSystem, base: String, dirs: Seq[HPath]): Seq[(HPath, String)] = {
+    val baseQ = f.makeQualified(new HPath(base)).toString
+    dirs.map(d => d -> f.makeQualified(d).toString.stripPrefix(baseQ).stripPrefix("/"))
+  }
 
   /** Co-located join layout: write `df` as a BUCKETED (optionally
     * bucket-sorted) table — `spark.table(name)` scans then expose the

@@ -198,7 +198,6 @@ object Streams {
   def dedupIngestStream(docs: DataFrame, bandsPath: String,
                         shinglesPath: String, checkpoint: String,
                         compactEvery: Int = 8,
-                        compactTargetFiles: Int = 1,
                         numHashes: Int = 16, rowsPerBand: Int = 4,
                         shingleN: Int = 3,
                         threshold: Double = 0.5): StreamingQuery =
@@ -229,8 +228,8 @@ object Streams {
           s, bandsPath, keepBatches = Set(batchId))
         graft.sources.KeyedParquetStore.rollupBatchPartitions(
           s, shinglesPath, keepBatches = Set(batchId))
-        graft.sources.KeyedParquetStore.compact(s, bandsPath, compactTargetFiles)
-        graft.sources.KeyedParquetStore.compact(s, shinglesPath, compactTargetFiles)
+        graft.sources.KeyedParquetStore.compact(s, bandsPath)
+        graft.sources.KeyedParquetStore.compact(s, shinglesPath)
         ()
       },
       compactEvery)
@@ -252,8 +251,7 @@ object Streams {
   def bm25IngestStream(docs: DataFrame, postingsPath: String,
                        termsPath: String, statsPath: String,
                        checkpoint: String, nBuckets: Int = 16,
-                       compactEvery: Int = 8,
-                       compactTargetFiles: Int = 1): StreamingQuery =
+                       compactEvery: Int = 8): StreamingQuery =
     epochSink(docs, checkpoint,
       ingest = (s, batch, batchId) =>
         graft.pipeline.IncrementalBm25.ingestBatch(
@@ -270,7 +268,7 @@ object Streams {
         graft.sources.KeyedParquetStore.rollupBatchPartitions(
           s, postingsPath, keepBatches = Set(batchId),
           partitionCols = Seq("batch", "tbucket"))
-        graft.sources.KeyedParquetStore.compact(s, postingsPath, compactTargetFiles)
+        graft.sources.KeyedParquetStore.compact(s, postingsPath)
         graft.pipeline.IncrementalBm25.rollupPartials(
           s, termsPath, statsPath, keepBatches = Set(batchId))
       },
@@ -287,8 +285,7 @@ object Streams {
     * compaction-cadence story as the other ingest sinks. */
   def ivfIngestStream(vectors: DataFrame, centroidsPath: String,
                       assignedPath: String, checkpoint: String,
-                      compactEvery: Int = 8,
-                      compactTargetFiles: Int = 1): StreamingQuery =
+                      compactEvery: Int = 8): StreamingQuery =
     epochSink(vectors, checkpoint,
       ingest = (s, batch, batchId) =>
         graft.pipeline.IncrementalIvf.ingestBatch(
@@ -297,7 +294,7 @@ object Streams {
         graft.sources.KeyedParquetStore.rollupBatchPartitions(
           s, assignedPath, keepBatches = Set(batchId),
           partitionCols = Seq("iv", "cell", "batch"))
-        graft.sources.KeyedParquetStore.compact(s, assignedPath, compactTargetFiles)
+        graft.sources.KeyedParquetStore.compact(s, assignedPath)
         ()
       },
       compactEvery)
@@ -318,8 +315,7 @@ object Streams {
                              threshold: Double,
                              bits: Int = 16, tables: Int = 4,
                              dim: Int = 64,
-                             compactEvery: Int = 8,
-                             compactTargetFiles: Int = 1): StreamingQuery =
+                             compactEvery: Int = 8): StreamingQuery =
     epochSink(vectors, checkpoint,
       ingest = (s, batch, batchId) => {
         graft.pipeline.IncrementalEmbedDedup.ingestBatch(
@@ -331,8 +327,8 @@ object Streams {
           s, sigsPath, keepBatches = Set(batchId))
         graft.sources.KeyedParquetStore.rollupBatchPartitions(
           s, vecsPath, keepBatches = Set(batchId))
-        graft.sources.KeyedParquetStore.compact(s, sigsPath, compactTargetFiles)
-        graft.sources.KeyedParquetStore.compact(s, vecsPath, compactTargetFiles)
+        graft.sources.KeyedParquetStore.compact(s, sigsPath)
+        graft.sources.KeyedParquetStore.compact(s, vecsPath)
         ()
       },
       compactEvery)

@@ -123,4 +123,30 @@ class PlanAuditSpec extends SparkSpec {
     assert(offenders.isEmpty,
       "call graft.marketviz.IndexCalculator.computeIndex instead:\n" + offenders.mkString("\n"))
   }
+
+  test("KeyedParquetStore locks and opens write planning in one place; " +
+      "src/main reads no spark.graft.store key but debugChecks") {
+    // KeyedParquetStore's commit protocol (writer lock → write planning →
+    // heal → stage → ownership re-check → swap) lives in one helper; a
+    // second lock or planning site in Sources.scala is a re-forked copy
+    // of it that can drift. The store's settings are constants, apart
+    // from the debugChecks verification gate.
+    val store = new java.io.File(mainRoot, "graft/sources/Sources.scala")
+    val forks = Seq("acquireLock(", "withWritePlanning(").flatMap { call =>
+      val defs = callSites(Seq(store), Seq(s"def $call"))
+      val uses = callSites(Seq(store), Seq(call)).filterNot(defs.contains)
+      if (uses.length > 1) Seq(s"$call called from ${uses.length} places:\n" + uses.mkString("\n"))
+      else Nil
+    }
+    val key = """spark\.graft\.store\.[A-Za-z0-9_]+""".r
+    val options = sources(mainRoot).flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.getLines().zipWithIndex.flatMap { case (line, i) =>
+        key.findAllIn(line).filter(_ != "spark.graft.store.debugChecks")
+          .map(k => s"${f.getPath}:${i + 1}: $k")
+      }.toList
+      finally src.close()
+    }
+    assert(forks.isEmpty && options.isEmpty, "\n" + (forks ++ options).mkString("\n"))
+  }
 }

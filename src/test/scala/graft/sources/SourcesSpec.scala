@@ -230,9 +230,10 @@ class SourcesSpec extends SparkSpec {
     assert(KeyedParquetStore.read(spark, path).get
       .select($"price").as[Double].head() === 1.0)
     // a STALE lock (older than ttl) is presumed crashed and taken over
+    assert(new java.io.File(path + ".lock")
+      .setLastModified(System.currentTimeMillis() - 3600 * 1000))
     KeyedParquetStore.upsert(spark, path,
-      Seq(("AAA", 9.0, 2)).toDF("ticker", "price", "ver"), Seq("ticker"), Seq($"ver"),
-      lockTtlMs = 0L)
+      Seq(("AAA", 9.0, 2)).toDF("ticker", "price", "ver"), Seq("ticker"), Seq($"ver"))
     assert(KeyedParquetStore.read(spark, path).get
       .select($"price").as[Double].head() === 9.0)
     assert(!new java.io.File(path + ".lock").exists())
@@ -465,6 +466,53 @@ class SourcesSpec extends SparkSpec {
     intercept[IllegalStateException] { KeyedParquetStore.compact(spark, path) }
     assert(dataFiles().length === 1)
     new java.io.File(path + ".lock").delete()
+  }
+
+  test("store writes plan AQE-off at one shuffle partition and restore the " +
+      "session's planning conf after every call") {
+    val planning = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    // coalescing off: AQE must not hide a missing partition pin by merging
+    // the four tiny shuffle partitions back into one
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val saved = (planning :+ coalesce).map(k => k -> spark.conf.getOption(k))
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    spark.conf.set(coalesce, "false")
+    def confRestored(after: String): Unit =
+      assert(planning.map(spark.conf.get) === Seq("true", "4"),
+        s"session planning conf changed by $after")
+    try {
+      val path = Files.createTempDirectory("store_planning").toString + "/t"
+      def batch(ver: Int) = (0 until 40).map(i => (i.toLong, i % 2, ver, s"v$ver-$i"))
+        .toDF("k", "p", "ver", "payload").repartition(4)
+      KeyedParquetStore.upsert(spark, path, batch(1), Seq("k"), Seq($"ver"),
+        partitionCols = Seq("p"))
+      confRestored("the first upsert")
+      // partition-scoped MERGE over both existing partitions: the
+      // last-wins window's shuffle is planned at one partition, so each
+      // rewritten partition dir holds exactly one data file
+      KeyedParquetStore.upsert(spark, path, batch(2), Seq("k"), Seq($"ver"),
+        partitionCols = Seq("p"), incomingUnique = false)
+      confRestored("the merge upsert")
+      def dataFiles(p: String) = new java.io.File(p).listFiles()
+        .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      Seq("p=0", "p=1").foreach { d =>
+        assert(dataFiles(s"$path/$d").length === 1, s"$d after the merge upsert")
+      }
+      assert(KeyedParquetStore.read(spark, path).get
+        .filter(!$"payload".startsWith("v2-")).count() === 0)
+      KeyedParquetStore.replace(spark, path, batch(3), partitionCols = Seq("p"))
+      confRestored("replace")
+      assert(KeyedParquetStore.deleteMatching(spark, path, Seq(0L, 1L).toDF("k"),
+        Seq("k"), Seq("p")) === 2)
+      confRestored("deleteMatching")
+      KeyedParquetStore.compact(spark, path)
+      confRestored("compact")
+      assert(KeyedParquetStore.read(spark, path).get.count() === 38)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   test("known-schema read skips footer inference yet stays evolution-safe (r7)") {
@@ -936,7 +984,7 @@ class SourcesSpec extends SparkSpec {
             checkEq(i, s"upsert(${rows.size})")
           case 7 | 8 => // compact: pure layout change
             if (model.nonEmpty) {
-              KeyedParquetStore.compact(spark, path, targetFiles = 1)
+              KeyedParquetStore.compact(spark, path)
               checkEq(i, "compact")
             }
           case 9 => // replace: the new truth is a random subset (maybe empty)
