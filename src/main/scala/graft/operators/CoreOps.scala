@@ -78,8 +78,7 @@ object CoreOps {
     * (`dashboard.py:196`). First row per partition is null. */
   def lagReturn(df: DataFrame, part: Seq[Column], order: Seq[Column],
                 value: Column, as: String): DataFrame = {
-    val w = if (part.isEmpty) Window.orderBy(order: _*)
-            else Window.partitionBy(part: _*).orderBy(order: _*)
+    val w = Window.partitionBy(part: _*).orderBy(order: _*)
     val prev = lag(value, 1).over(w)
     df.withColumn(as, (value - prev) / prev * 100)
   }
@@ -88,9 +87,8 @@ object CoreOps {
     * (`dashboard.py:198-200`). */
   def returnFromFirst(df: DataFrame, part: Seq[Column], order: Seq[Column],
                       value: Column, as: String): DataFrame = {
-    val w0 = if (part.isEmpty) Window.orderBy(order: _*)
-             else Window.partitionBy(part: _*).orderBy(order: _*)
-    val w = w0.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val w = Window.partitionBy(part: _*).orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val init = first(value).over(w)
     df.withColumn(as, (value - init) / init * 100)
   }
@@ -124,8 +122,7 @@ object CoreOps {
     // — valid only when the row count is known-small (one row per date in
     // the reference's index series); at scale callers partition per
     // instrument/shard so the sort never concentrates on one task.
-    val w = if (part.isEmpty) Window.orderBy(order: _*)
-            else Window.partitionBy(part: _*).orderBy(order: _*)
+    val w = Window.partitionBy(part: _*).orderBy(order: _*)
     df.withColumn("prev", lag(arr, 1).over(w))
       // array_minus with a null right side returns its left side whole,
       // so the first row's empty `added` is spelled out: slice(arr, 1, 0)
@@ -144,8 +141,7 @@ object CoreOps {
     * null-free arrays the two coincide (asserted in CoreOpsSpec). */
   def lagSetDiff(df: DataFrame, part: Seq[Column], order: Seq[Column],
                  arr: Column): DataFrame = {
-    val w = if (part.isEmpty) Window.orderBy(order: _*)
-            else Window.partitionBy(part: _*).orderBy(order: _*)
+    val w = Window.partitionBy(part: _*).orderBy(order: _*)
     df.withColumn("prev", lag(arr, 1).over(w))
       // coalesce keeps first-row semantics identical to lagArrayDiff's:
       // added = [] (not null) when prev is null, removed stays null

@@ -408,35 +408,50 @@ object Dedup {
         .select(col("doc_a"), col("doc_b")))
   }
 
-  /** Identical-text classes `(doc_id, rep)` over a (doc_id, text)
-    * relation — rep = the class's MIN id, [[exact]]'s election verbatim
-    * (one hash-keyed groupBy with map-side partials, then a null-safe
-    * join-back on the 60-bit content hash; null texts share one class,
-    * the [[softDedup]] convention). The collapse substrate for every
-    * banded near-dup face: identical texts have identical shingle sets,
-    * hence identical minhash/simhash signatures, so a K-copy boilerplate
-    * cluster collides with itself in EVERY band and the band self-join
+  /** Identical-class collapse — step 1 of the r19 scale fix shared by
+    * every banded near-dup face (the minhash, simhash and cosine pair
+    * faces, the curation chain, both incremental near-dup indexes).
+    * Identical inputs have identical signatures, so a K-copy class
+    * collides with itself in EVERY band/table and a bucket self-join
     * emits C(K,2) candidate pairs — ~10¹⁸ at a 30% boilerplate cluster
     * over 10⁹ docs (the r18 verdict's measured scale-killer: q37 169.9 s
     * / q87 141.0 s at dupheavy sf0.1). Banding ONE representative per
-    * class erases that regime exactly: identical shingle sets ⇒
-    * identical candidates, Jaccard values, and closure, and min-id
-    * election is preserved because the rep IS its class's min id.
+    * class erases that regime exactly: identical inputs ⇒ identical
+    * candidates, scores and closure, and min-id election is preserved
+    * because the rep IS its class's min id.
+    *
+    * `classReps` is the class table — one row per distinct `key`
+    * (null-safe: null keys share one class), `rep` = the class's MIN
+    * non-null `id`, plus any `stats` aggregates; `classMembers` maps each
+    * row to its class's rep, returning (`id`, `keep`…, `rep`). A family
+    * that consumes its class table again (the cosine faces use it as
+    * the rep-vector relation) pins it and passes it in.
     *
     * Null-id rows are dropped: under the pre-collapse plans they could
-    * never surface in any pair (`doc_a < doc_b` and the self-pair
-    * exemptions all evaluate null → filtered), so excluding them up
-    * front reproduces that verdict without letting `least/greatest`
-    * manufacture degenerate pairs during expansion. Pinned — every
-    * caller consumes it ≥ 2× (rep election + label/pair expansion). */
-  private[graft] def identicalClasses(docs: DataFrame,
-                                         idCol: String = "doc_id"): DataFrame = {
-    val ids = docs.filter(col(idCol).isNotNull)
-      .select(col(idCol).as("doc_id"), md5Hash60(col("text")).as("__ch"))
-    val reps = ids.groupBy(col("__ch")).agg(min(col("doc_id")).as("rep"))
-      .withColumnRenamed("__ch", "__chr")
-    graft.Pin.ser(ids.join(reps, col("__ch") <=> col("__chr"))
-      .select(col("doc_id"), col("rep")))
+    * never surface in any pair (`a < b` and the self-pair exemptions all
+    * evaluate null → filtered), so excluding them up front reproduces
+    * that verdict without letting `least/greatest` manufacture
+    * degenerate pairs during expansion. Members are pinned — every
+    * caller consumes them ≥ 2× (rep election + label/pair expansion). */
+  private[graft] def classReps(rows: DataFrame, id: String, key: String,
+                               stats: Column*): DataFrame =
+    rows.filter(col(id).isNotNull).groupBy(col(key))
+      .agg(min(col(id)).as("rep"), stats: _*)
+
+  private[graft] def classMembers(rows: DataFrame, id: String, key: String,
+                                  classes: DataFrame, keep: String*): DataFrame =
+    graft.Pin.ser(rows.filter(col(id).isNotNull)
+      .join(classes.select(col(key).as("__key"), col("rep")),
+        col(key) <=> col("__key"))
+      .select((id +: keep :+ "rep").map(col): _*))
+
+  /** The text family's classes `(doc_id, rep)` over a (doc_id, text)
+    * relation, keyed on the 60-bit content hash — [[exact]]'s min-id
+    * election verbatim; null texts share one class, the [[softDedup]]
+    * convention. */
+  private[graft] def identicalClasses(docs: DataFrame): DataFrame = {
+    val ids = docs.select(col("doc_id"), md5Hash60(col("text")).as("__ch"))
+    classMembers(ids, "doc_id", "__ch", classReps(ids, "doc_id", "__ch"))
   }
 
   /** The collapsed minhash-LSH core shared by [[minhashLsh]],
@@ -470,37 +485,77 @@ object Dedup {
     (members, sh, exactJaccard(cands, sh).filter(col("jaccard") >= threshold))
   }
 
-  /** Member-grain cluster labels from collapsed rep-level pairs — the
-    * expansion half of the r19 collapse, shared by [[nearDupLabels]] and
-    * [[IncrementalDedup]]'s in-batch closure. Components over the FULL
-    * pair graph are the rep-level components blown up by their classes
-    * (each class is a jaccard-1.0 clique), plus every multi-member
-    * shingled class whose rep paired with no other class (an isolated
-    * clique — its members pair only with each other). Labels are the
-    * component-min id, which is always a rep (reps are class minima), so
-    * member label = its rep's label, defaulting to the rep itself for
-    * isolated cliques. Classes without shingles (< shingleN tokens, or
-    * null text) never signed a band and never pair — absent, exactly the
-    * pre-collapse verdict. Returns (doc_id, label); docs in no pair are
-    * absent (the [[dedupClusters]] contract). */
-  private[graft] def expandMemberLabels(members: DataFrame, sh: DataFrame,
-                                           repPairs: DataFrame,
-                                           threshold: Double): DataFrame = {
+  /** Rep pairs → member-grain cluster labels — the expansion half of
+    * the r19 collapse at the cluster grain, shared by every label face.
+    * Components over the FULL member pair graph are the rep-level
+    * components blown up by their classes (each class a clique of
+    * identical members), plus every class in `cliqueReps` whose rep
+    * paired with no other class (an isolated clique — its members pair
+    * only with each other). Labels are the component-min id, which is
+    * always a rep (reps are class minima), so member label = its rep's
+    * label, defaulting to the rep itself for isolated cliques. Each
+    * family supplies its clique rule as `cliqueReps` (rep); None when no
+    * class can pair with itself. Returns (`id`, label); members in no
+    * pair are absent (the [[dedupClusters]] contract). */
+  private[graft] def expandRepLabels(members: DataFrame, id: String,
+                                     repPairs: DataFrame,
+                                     cliqueReps: Option[DataFrame]): DataFrame = {
     val repLabels = dedupClusters(repPairs.select(col("doc_a"), col("doc_b")))
       .select(col("doc_id").as("rep"), col("label"))
-    val labeledReps =
-      if (threshold <= 1.0) {
-        // isolated identical cliques: ≥2 members AND ≥1 shingle
-        val cliques = members.groupBy(col("rep")).agg(count(lit(1)).as("__k"))
-          .filter(col("__k") >= 2).select(col("rep"))
-          .join(sh.select(col("doc_id").as("rep")), Seq("rep"), "left_semi")
-        repLabels.select(col("rep")).unionByName(cliques).distinct()
-      } else repLabels.select(col("rep"))
-    labeledReps
+    cliqueReps.fold(repLabels.select(col("rep")))(
+        repLabels.select(col("rep")).unionByName(_).distinct())
       .join(repLabels, Seq("rep"), "left")
       .select(col("rep"), coalesce(col("label"), col("rep")).as("label"))
       .join(members, Seq("rep"))
-      .select(col("doc_id"), col("label"))
+      .select(col(id), col("label"))
+  }
+
+  /** The text family's label expansion ([[nearDupLabels]], the curation
+    * chain, [[IncrementalDedup]]'s in-batch closure): its cliques are the
+    * multi-member classes with ≥ 1 shingle — classes without shingles
+    * (< shingleN tokens, or null text) never signed a band and never
+    * pair, exactly the pre-collapse verdict — and only while a Jaccard
+    * of 1.0 clears `threshold`. Returns (doc_id, label). */
+  private[graft] def expandMemberLabels(members: DataFrame, sh: DataFrame,
+                                        repPairs: DataFrame,
+                                        threshold: Double): DataFrame =
+    expandRepLabels(members, "doc_id", repPairs,
+      if (threshold <= 1.0)
+        Some(members.groupBy(col("rep")).agg(count(lit(1)).as("__k"))
+          .filter(col("__k") >= 2).select(col("rep"))
+          .join(sh.select(col("doc_id").as("rep")), Seq("rep"), "left_semi"))
+      else None)
+
+  /** Rep pairs → member pairs — the expansion half of the r19 collapse
+    * at the pair grain, shared by the minhash, simhash and cosine pair
+    * faces. Each rep pair (`a`, `b`, `score`) expands to its two
+    * classes' member product, oriented `least`/`greatest`, inheriting
+    * the reps' score verbatim (identical inputs ⇒ identical scores).
+    * `cliques` adds the within-class pairs as (clique members, peers,
+    * within score): the clique members are the member rows of the
+    * classes the family's clique rule admits, and the columns they add
+    * over their peers (the within score's inputs) ride through the
+    * self-join; each pairs with its class's peers and is scored by the
+    * within-score column, named `score` — what a member pair of
+    * identical inputs would score. The output is inherently C(K,2) in
+    * class size — cluster-grain consumers belong on [[expandRepLabels]]. */
+  private[graft] def expandRepPairs(repPairs: DataFrame, members: DataFrame,
+                                    id: String, a: String, b: String,
+                                    score: String,
+                                    cliques: Option[(DataFrame, DataFrame, Column)]): DataFrame = {
+    val cross = repPairs
+      .join(members.select(col("rep").as(a), col(id).as("__a")), Seq(a))
+      .join(members.select(col("rep").as(b), col(id).as("__b")), Seq(b))
+      .select(least(col("__a"), col("__b")).as(a),
+        greatest(col("__a"), col("__b")).as(b), col(score))
+    cliques.fold(cross) { case (clique, peers, within) =>
+      cross.unionByName(clique
+        .select(col("rep") +: clique.columns.toSeq.filterNot(peers.columns.contains)
+          .map(col) :+ col(id).as(a): _*)
+        .join(peers.select(col("rep"), col(id).as(b)), Seq("rep"))
+        .filter(col(a) < col(b))
+        .select(col(a), col(b), within))
+    }
   }
 
   /** MinHash-LSH near-dup detection end to end: identical-class collapse
@@ -532,25 +587,13 @@ object Dedup {
                  shingleN: Int = 3, threshold: Double = 0.5): DataFrame = {
     val (members, sh, repPairs) =
       collapsedRepPairs(docs, numHashes, rowsPerBand, shingleN, threshold)
-    val cross = repPairs
-      .join(members.select(col("rep").as("doc_a"), col("doc_id").as("__a")),
-        Seq("doc_a"))
-      .join(members.select(col("rep").as("doc_b"), col("doc_id").as("__b")),
-        Seq("doc_b"))
-      .select(least(col("__a"), col("__b")).as("doc_a"),
-        greatest(col("__a"), col("__b")).as("doc_b"), col("jaccard"))
-    if (threshold <= 1.0) {
-      // within-class pairs: every multi-member shingled class is a
-      // jaccard-1.0 clique (sub-shingle and null-text classes never
-      // banded, so they never pair — the sh semi-join reproduces that)
-      val m = members.join(sh.select(col("doc_id").as("rep")),
-        Seq("rep"), "left_semi")
-      val within = m.select(col("rep"), col("doc_id").as("doc_a"))
-        .join(m.select(col("rep"), col("doc_id").as("doc_b")), Seq("rep"))
-        .filter(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b"), lit(1.0).as("jaccard"))
-      cross.unionByName(within)
-    } else cross
+    // within-class pairs: every multi-member shingled class is a
+    // jaccard-1.0 clique (sub-shingle and null-text classes never
+    // banded, so they never pair — the sh semi-join reproduces that)
+    val m = members.join(sh.select(col("doc_id").as("rep")),
+      Seq("rep"), "left_semi")
+    expandRepPairs(repPairs, members, "doc_id", "doc_a", "doc_b", "jaccard",
+      if (threshold <= 1.0) Some((m, m, lit(1.0).as("jaccard"))) else None)
   }
 
   /** Near-dup cluster labels end to end — [[minhashLsh]] composed with
@@ -1004,12 +1047,8 @@ object Dedup {
     // signatures never matched any band bucket pre-collapse (null
     // equi-join keys), so their classes are excluded from expansion;
     // null ids could never pass `doc_a < doc_b`.
-    val ids = sigs.filter(col("doc_id").isNotNull)
-      .select(col("doc_id"), col("simhash"))
-    val reps = ids.groupBy(col("simhash")).agg(min(col("doc_id")).as("rep"))
-      .withColumnRenamed("simhash", "__sr")
-    val members = graft.Pin.ser(ids.join(reps, col("simhash") <=> col("__sr"))
-      .select(col("doc_id"), col("simhash"), col("rep")))
+    val members = classMembers(sigs, "doc_id", "simhash",
+      classReps(sigs, "doc_id", "simhash"), "simhash")
     val repSigs = members.filter(col("doc_id") === col("rep"))
       .select(col("doc_id"), col("simhash"))
     val mask = (1L << bitsPerBand) - 1
@@ -1029,20 +1068,8 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"),
         bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("long").as("hamming"))
       .filter(col("hamming") <= maxHamming)
-    val cross = repPairs
-      .join(members.select(col("rep").as("doc_a"), col("doc_id").as("__a")),
-        Seq("doc_a"))
-      .join(members.select(col("rep").as("doc_b"), col("doc_id").as("__b")),
-        Seq("doc_b"))
-      .select(least(col("__a"), col("__b")).as("doc_a"),
-        greatest(col("__a"), col("__b")).as("doc_b"), col("hamming"))
-    if (maxHamming >= 0) {
-      val m = members.filter(col("simhash").isNotNull)
-      val within = m.select(col("rep"), col("doc_id").as("doc_a"))
-        .join(m.select(col("rep"), col("doc_id").as("doc_b")), Seq("rep"))
-        .filter(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b"), lit(0L).as("hamming"))
-      cross.unionByName(within)
-    } else cross
+    val m = members.filter(col("simhash").isNotNull)
+    expandRepPairs(repPairs, members, "doc_id", "doc_a", "doc_b", "hamming",
+      if (maxHamming >= 0) Some((m, m, lit(0L).as("hamming"))) else None)
   }
 }

@@ -103,35 +103,23 @@ object IncrementalBm25 {
           "have NULL text — such docs count in n_docs/sum_dl but write no " +
           "postings, so the one-batch-per-doc check cannot see them; drop " +
           "or scrub null texts upstream")
-      // WITHIN-batch duplicate rows are the one shape the store's own
-      // incomingUnique vouch check cannot see here: the tf/df/stats
-      // aggregations COLLAPSE the duplicates into single rows whose
-      // values are silently doubled (tf×2, df counts the doc once but
-      // n_docs/sum_dl count it twice), so every downstream relation has
-      // perfectly unique keys and inflated numbers. An at-least-once
-      // source can redeliver a record inside one micro-batch; refuse it
-      // here, at the only point the duplication is still visible.
-      val dupInBatch = docs.groupBy(col("doc_id")).agg(count(lit(1)).as("__n"))
-        .filter(col("__n") > 1).select(col("doc_id")).limit(3)
-        .collect().map(_.getLong(0))
-      require(dupInBatch.isEmpty,
-        s"BM25 ingest precondition violated: doc_id(s) ${dupInBatch.mkString(", ")} " +
-          s"appear more than once within batch '$batchId' — the tokenize " +
-          "aggregations would silently double tf/n_docs/sum_dl (dedup the " +
-          "batch upstream, e.g. dropDuplicates(\"doc_id\"))")
-      KeyedParquetStore.read(spark, postingsPath, schema = Some(postingsSchema))
-        .foreach { stored =>
-          val clash = stored.filter(col("batch") =!= lit(batchId))
-            .join(docs.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-            .select(col("doc_id")).distinct().limit(3)
-            .collect().map(_.getLong(0))
-          require(clash.isEmpty,
-            s"BM25 ingest precondition violated: doc_id(s) ${clash.mkString(", ")} " +
-              s"already indexed under a different batch than '$batchId' — " +
-              "re-ingesting a doc under a new batch id double-counts its " +
-              "postings/df/stats partials (replays must reuse the original batch id)")
-        }
     }
+    // WITHIN-batch duplicate rows are the one shape the store's own
+    // incomingUnique vouch check cannot see here: the tf/df/stats
+    // aggregations COLLAPSE the duplicates into single rows whose values
+    // are silently doubled (tf×2, df counts the doc once but
+    // n_docs/sum_dl count it twice), so every downstream relation has
+    // perfectly unique keys and inflated numbers. An at-least-once
+    // source can redeliver a record inside one micro-batch; refuse it
+    // here, at the only point the duplication is still visible.
+    DeliveryGuard.check(spark, docs, batchId, "doc_id", postingsPath,
+      postingsSchema, "doc_id", "BM25",
+      withinWhy = Some("the tokenize aggregations would silently double " +
+        "tf/n_docs/sum_dl (dedup the batch upstream, e.g. " +
+        "dropDuplicates(\"doc_id\"))"),
+      resentWhy = "re-ingesting a doc under a new batch id double-counts " +
+        "its postings/df/stats partials (replays must reuse the original " +
+        "batch id)")
     // The whole per-batch chain (checkpoint materializations + the three
     // upserts) plans without AQE — see withWritePlanning: these are
     // batch-sized plans whose AQE stage-materialization jobs were ~24 of

@@ -94,21 +94,11 @@ object IncrementalIvf {
     // duplicate rows need no check here: they reach the store as
     // duplicate neighbor_id keys and fail its own incomingUnique vouch
     // check under the same flag.
-    if (KeyedParquetStore.debugChecksOn(spark))
-      KeyedParquetStore.read(spark, assignedPath, schema = Some(assignedSchema))
-        .foreach { stored =>
-          val resent = stored.filter(col("batch") =!= lit(batchId))
-            .join(batch.select(col("vec_id").as("neighbor_id")).distinct(),
-              Seq("neighbor_id"), "left_semi")
-            .select(col("neighbor_id")).distinct().limit(3)
-            .collect().map(_.getLong(0))
-          require(resent.isEmpty,
-            s"IVF ingest precondition violated: vec_id(s) ${resent.mkString(", ")} " +
-              s"already assigned under a different batch than '$batchId' — the " +
-              "partition-scoped merge never sees the old rows, so the vector " +
-              "would be stored (and returned by searches) twice (replays must " +
-              "reuse the original batch id)")
-        }
+    DeliveryGuard.check(spark, batch, batchId, "vec_id", assignedPath,
+      assignedSchema, "neighbor_id", "IVF", withinWhy = None,
+      resentWhy = "the partition-scoped merge never sees the old rows, so " +
+        "the vector would be stored (and returned by searches) twice " +
+        "(replays must reuse the original batch id)")
     val index = centroidsOf(spark, centroidsPath)
     // ONE driver action over the KB-sized centroid store serves both the
     // version stamp and the static partition hint (a second agg job per

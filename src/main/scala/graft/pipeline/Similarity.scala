@@ -519,17 +519,15 @@ object Similarity {
     // expression the member pair would have evaluated. Null embeddings
     // are excluded by vecRows (the module-wide contract); null ids could
     // never pass `id_a < id_b` pre-collapse, so they are dropped too.
-    val v0 = vecRows(vectors).filter(col("vec_id").isNotNull)
+    val v0 = vecRows(vectors)
       .select(col("vec_id"), asDouble(col("embedding")).as("e"))
     // grouped doubles as the rep-vector relation: one aggregation yields
     // class reps, sizes, AND the bucketing substrate — no second corpus
     // pass. Pinned: consumed by sigs, the confirm re-attach (×2), the
     // within scorer, and both estimate jobs.
-    val grouped = graft.Pin.ser(v0.groupBy(col("e"))
-      .agg(min(col("vec_id")).as("rep"), count(lit(1)).as("__k")))
-    val members = graft.Pin.ser(v0
-      .join(grouped.select(col("e").as("__e"), col("rep")), col("e") <=> col("__e"))
-      .select(col("vec_id"), col("rep")))
+    val grouped = graft.Pin.ser(
+      Dedup.classReps(v0, "vec_id", "e", count(lit(1)).as("__k")))
+    val members = Dedup.classMembers(v0, "vec_id", "e", grouped)
     val v = grouped.select(col("rep").as("vec_id"), col("e"))
     val sigs = graft.Pin.ser(v
       .withColumn("ts", explode(lshSignatures(col("e"), bits, tables, dim)))
@@ -572,23 +570,14 @@ object Similarity {
       .select(col("id_a"), col("id_b"),
         round(cosine(col("va"), col("vb")), 6).as("cos_sim"))
       .filter(col("cos_sim") >= threshold)
-    val cross = repPairs
-      .join(members.select(col("rep").as("id_a"), col("vec_id").as("__a")), Seq("id_a"))
-      .join(members.select(col("rep").as("id_b"), col("vec_id").as("__b")), Seq("id_b"))
-      .select(least(col("__a"), col("__b")).as("id_a"),
-        greatest(col("__a"), col("__b")).as("id_b"), col("cos_sim"))
     // multi-member classes whose self-cosine clears the threshold (any
     // real vector: ~1.0; a zero vector follows the same NaN semantics
     // the member pair would have) form within-class cliques
     val withinOk = grouped.filter(col("__k") >= 2)
       .select(col("rep"), round(cosine(col("e"), col("e")), 6).as("cos_sim"))
       .filter(col("cos_sim") >= threshold)
-    val within = members.join(withinOk, Seq("rep"))
-      .select(col("rep"), col("cos_sim"), col("vec_id").as("id_a"))
-      .join(members.select(col("rep"), col("vec_id").as("id_b")), Seq("rep"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), col("cos_sim"))
-    cross.unionByName(within)
+    Dedup.expandRepPairs(repPairs, members, "vec_id", "id_a", "id_b", "cos_sim",
+      Some((members.join(withinOk, Seq("rep")), members, col("cos_sim"))))
   }
 
   /** Embedding near-dup CLUSTERS at scale: the consumer face of the

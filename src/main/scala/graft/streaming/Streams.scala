@@ -170,6 +170,24 @@ object Streams {
       }
       .start()
 
+  /** The ingest sinks' store maintenance: fold each store's aged batch
+    * partitions first (the partition POPULATION grows one directory per
+    * epoch; compact alone never bounds it —
+    * [[graft.sources.KeyedParquetStore.rollupBatchPartitions]] scaladoc),
+    * keeping the current epoch `batchId` on the replay horizon, then
+    * compact what remains. The fold SELF-GATES geometrically (aged bytes
+    * vs store bytes), so the sink's fixed cadence only decides how often
+    * the cheap listing check runs — the O(store) rewrite amortizes to
+    * linear total I/O over the stream's lifetime, not O(store) per
+    * cadence. */
+  private def rollupThenCompact(s: SparkSession, batchId: String,
+                                paths: Seq[String],
+                                partitionCols: Seq[String] = Seq("batch")): Unit = {
+    paths.foreach(p => graft.sources.KeyedParquetStore.rollupBatchPartitions(
+      s, p, keepBatches = Set(batchId), partitionCols = partitionCols))
+    paths.foreach(p => graft.sources.KeyedParquetStore.compact(s, p))
+  }
+
   /** Streaming INCREMENTAL near-dup ingest: each micro-batch of
     * documents dedups against the persisted band/shingle index and
     * appends only its survivors
@@ -215,23 +233,8 @@ object Streams {
           numHashes, rowsPerBand, shingleN, threshold)
         ()
       },
-      maintain = (s, batchId) => {
-        // Fold aged batch partitions first (the partition POPULATION
-        // grows one directory per epoch; compact alone never bounds it —
-        // KeyedParquetStore.rollupBatchPartitions scaladoc), current
-        // epoch on the replay horizon, then compact what remains. The
-        // fold SELF-GATES geometrically (aged bytes vs store bytes), so
-        // this fixed cadence only decides how often the cheap listing
-        // check runs — the O(store) rewrite amortizes to linear total
-        // I/O over the stream's lifetime, not O(store) per cadence.
-        graft.sources.KeyedParquetStore.rollupBatchPartitions(
-          s, bandsPath, keepBatches = Set(batchId))
-        graft.sources.KeyedParquetStore.rollupBatchPartitions(
-          s, shinglesPath, keepBatches = Set(batchId))
-        graft.sources.KeyedParquetStore.compact(s, bandsPath)
-        graft.sources.KeyedParquetStore.compact(s, shinglesPath)
-        ()
-      },
+      maintain = (s, batchId) =>
+        rollupThenCompact(s, batchId, Seq(bandsPath, shinglesPath)),
       compactEvery)
 
   /** Streaming BM25 index maintenance: each micro-batch of documents
@@ -265,10 +268,8 @@ object Streams {
         // and never redelivered). `batchId` is epochSink's single copy
         // of the partition name the ingest wrote — the horizon can't
         // drift from it.
-        graft.sources.KeyedParquetStore.rollupBatchPartitions(
-          s, postingsPath, keepBatches = Set(batchId),
+        rollupThenCompact(s, batchId, Seq(postingsPath),
           partitionCols = Seq("batch", "tbucket"))
-        graft.sources.KeyedParquetStore.compact(s, postingsPath)
         graft.pipeline.IncrementalBm25.rollupPartials(
           s, termsPath, statsPath, keepBatches = Set(batchId))
       },
@@ -290,13 +291,9 @@ object Streams {
       ingest = (s, batch, batchId) =>
         graft.pipeline.IncrementalIvf.ingestBatch(
           s, batch, batchId, centroidsPath, assignedPath),
-      maintain = (s, batchId) => {
-        graft.sources.KeyedParquetStore.rollupBatchPartitions(
-          s, assignedPath, keepBatches = Set(batchId),
-          partitionCols = Seq("iv", "cell", "batch"))
-        graft.sources.KeyedParquetStore.compact(s, assignedPath)
-        ()
-      },
+      maintain = (s, batchId) =>
+        rollupThenCompact(s, batchId, Seq(assignedPath),
+          partitionCols = Seq("iv", "cell", "batch")),
       compactEvery)
 
   /** Streaming embedding near-dup ingest: each micro-batch of vectors
@@ -322,15 +319,8 @@ object Streams {
           s, batch, batchId, sigsPath, vecsPath, threshold, bits, tables, dim)
         ()
       },
-      maintain = (s, batchId) => {
-        graft.sources.KeyedParquetStore.rollupBatchPartitions(
-          s, sigsPath, keepBatches = Set(batchId))
-        graft.sources.KeyedParquetStore.rollupBatchPartitions(
-          s, vecsPath, keepBatches = Set(batchId))
-        graft.sources.KeyedParquetStore.compact(s, sigsPath)
-        graft.sources.KeyedParquetStore.compact(s, vecsPath)
-        ()
-      },
+      maintain = (s, batchId) =>
+        rollupThenCompact(s, batchId, Seq(sigsPath, vecsPath)),
       compactEvery)
 
   /** Streaming exact dedup: drop events whose `event_id` was already seen

@@ -149,4 +149,24 @@ class PlanAuditSpec extends SparkSpec {
     }
     assert(forks.isEmpty && options.isEmpty, "\n" + (forks ++ options).mkString("\n"))
   }
+
+  test("the incremental ingests share one delivery guard, and the two near-dup " +
+      "index modules write through the shared NearDupIndex protocol only") {
+    // The within-batch duplicate refusal is written once (DeliveryGuard);
+    // a second copy of its message is a re-forked guard that can drift.
+    // IncrementalDedup/IncrementalEmbedDedup supply their family's
+    // signing and confirms; a store write, delete or write-planning
+    // window in either is a re-forked copy of the shared protocol.
+    val phrase = "more than once within batch"
+    val guards = callSites(sources(mainRoot), Seq(phrase))
+      .map(_.split(':').head).distinct
+    val modules = Seq("IncrementalDedup.scala", "IncrementalEmbedDedup.scala")
+      .map(f => new java.io.File(mainRoot, s"graft/pipeline/$f"))
+    modules.foreach(f => assert(f.isFile, s"$f not found"))
+    val writes = callSites(modules,
+      Seq("KeyedParquetStore.upsert(", "deleteMatching(", "withWritePlanning("))
+    assert(guards.length <= 1 && writes.isEmpty,
+      s"\n'$phrase' in ${guards.length} files:\n" + guards.mkString("\n") +
+        "\nstore calls in the near-dup index modules:\n" + writes.mkString("\n"))
+  }
 }

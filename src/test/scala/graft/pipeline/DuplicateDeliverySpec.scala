@@ -20,18 +20,21 @@ import java.nio.file.Files
   *  - `cross-batch`: an id re-delivered under a DIFFERENT batch id
   *    (the shape the partition-scoped merges can never see).
   *
-  * | module          | within-batch            | same-batch replay | cross-batch |
-  * |-----------------|-------------------------|-------------------|-------------|
-  * | IncrementalBm25 | refuse (dup doc_id)     | idempotent        | refuse      |
-  * | IncrementalDedup| refuse (dup doc_id)     | idempotent        | refuse      |
-  * | IncrementalIvf  | refuse (store's         | idempotent        | refuse      |
-  * |                 | incomingUnique vouch)   |                   |             |
+  * | module                | within-batch            | same-batch replay | cross-batch |
+  * |-----------------------|-------------------------|-------------------|-------------|
+  * | IncrementalBm25       | refuse (dup doc_id)     | idempotent        | refuse      |
+  * | IncrementalDedup      | refuse (dup doc_id)     | idempotent        | refuse      |
+  * | IncrementalEmbedDedup | refuse (dup vec_id)     | idempotent        | refuse      |
+  * | IncrementalIvf        | refuse (store's         | idempotent        | refuse      |
+  * |                       | incomingUnique vouch)   |                   |             |
   *
   * Why every within-batch cell refuses: BM25's tf/n_docs/sum_dl
   * arithmetic double-counts duplicates even with identical text; dedup
   * would fuse DIFFERING texts under one id into a chimera signature
   * (unique store keys — invisible to the store's vouch) and would store
-  * duplicate shingle keys even for identical texts; IVF duplicates
+  * duplicate shingle keys even for identical texts; embedding dedup
+  * would store two signature sets under one id for differing vectors
+  * and duplicate vector keys for identical ones; IVF duplicates
   * reach the store as duplicate neighbor_id keys, so the store's own
   * incomingUnique check is the asserted refusal point — the matrix pins
   * WHICH guard fires for every cell, so a refactor that silently
@@ -118,6 +121,42 @@ class DuplicateDeliverySpec extends SparkSpec {
       IncrementalDedup.ingestBatch(spark,
         docs(1L -> "the quick brown fox jumps over the lazy dog near the river"),
         "b9", bP, shP)
+    }
+  }
+
+  test("duplicate-delivery matrix: IncrementalEmbedDedup") {
+    val s = tmp("ddm_embed")
+    val (sgP, vP) = (s"$s/sigs", s"$s/vecs")
+    def vecs(rows: (Long, Seq[Double])*): DataFrame =
+      rows.map { case (i, e) => (i, e.toArray) }.toDF("vec_id", "embedding")
+    def ingest(b: DataFrame, batchId: String): Unit =
+      IncrementalEmbedDedup.ingestBatch(spark, b, batchId, sgP, vP,
+        threshold = 0.999, bits = 6, dim = 4)
+    val b0 = vecs(1L -> Seq(1.0, 0.0, 0.0, 0.0), 2L -> Seq(0.0, 1.0, 0.0, 0.0))
+    ingest(b0, "b0")
+    def storeState() = (
+      KeyedParquetStore.read(spark, sgP).get
+        .select($"vec_id", $"t", $"sig").as[(Long, Int, Long)]
+        .collect().sorted.toSeq,
+      KeyedParquetStore.read(spark, vP).get
+        .select($"vec_id", $"embedding").as[(Long, Seq[Float])]
+        .collect().sortBy(_._1).toSeq)
+
+    // within-batch: refused for differing vectors (two signature sets
+    // under one id) and identical ones (duplicate vector-store keys)
+    refuses("more than once within batch") {
+      ingest(vecs(20L -> Seq(0.0, 0.0, 1.0, 0.0), 20L -> Seq(0.0, 0.0, 0.0, 1.0)), "b2")
+    }
+    refuses("more than once within batch") {
+      ingest(vecs(10L -> Seq(0.0, 0.0, 1.0, 0.0), 10L -> Seq(0.0, 0.0, 1.0, 0.0)), "b1")
+    }
+    // same-batch replay: idempotent (both stores' rows equal)
+    val before = storeState()
+    withChecks { ingest(b0, "b0") }
+    assert(storeState() === before)
+    // cross-batch: refused (self-pair exemption would re-admit the vector)
+    refuses("different batch") {
+      ingest(vecs(1L -> Seq(1.0, 0.0, 0.0, 0.0)), "b9")
     }
   }
 
