@@ -12,8 +12,12 @@ object Bench {
     // (10.8 s vs 4.5 s for the same query on the same machine) can only be
     // adjudicated with per-run evidence from INSIDE the full-registry run,
     // since the regression never reproduces in isolation. Stdout contract
-    // (one JSON line) is unchanged; the sidecar is additive.
-    val evPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_EVIDENCE", "bench_evidence.jsonl")
+    // (one JSON line) is unchanged; the sidecar is additive. The default
+    // lands under the build's gitignored target/ so a local run never
+    // overwrites the committed root-level evidence file.
+    val evPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_EVIDENCE",
+      "target/bench_evidence.jsonl")
+    new java.io.File(evPath).getAbsoluteFile.getParentFile.mkdirs()
     val ev = new java.io.PrintWriter(new java.io.FileWriter(evPath, false))
     @volatile var jobs = 0
     @volatile var stages = 0
@@ -96,8 +100,7 @@ object Bench {
     // first (r3 attributed multi-second cold reads to q37 this way). A
     // noop write reads every column's data pages; count() would prune to
     // footer metadata and warm nothing.
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { t =>
+    Tables.names.foreach { t =>
       spark.read.parquet(s"$sfDir/$t.parquet")
         .write.format("noop").mode("overwrite").save()
     }

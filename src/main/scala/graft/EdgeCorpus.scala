@@ -48,9 +48,6 @@ import org.apache.spark.sql.functions._
   * Usage: `runMain graft.EdgeCorpus <srcSfDir> <dstDir> <empty|tiny|nulls|unicode>`.
   */
 object EdgeCorpus {
-  private val AllTables = Seq("region", "nation", "customer", "supplier",
-    "part", "orders", "lineitem", "events", "documents", "embeddings")
-
   def main(args: Array[String]): Unit = {
     require(args.length == 3,
       "usage: graft.EdgeCorpus <srcSfDir> <dstDir> " +
@@ -73,7 +70,7 @@ object EdgeCorpus {
 
     mode match {
       case "empty" =>
-        AllTables.foreach(t => write(t, raw(t).limit(0)))
+        Tables.names.foreach(t => write(t, raw(t).limit(0)))
       case "tiny" =>
         Seq("region", "nation", "customer", "supplier", "part")
           .foreach(t => write(t, raw(t)))
@@ -205,7 +202,7 @@ object EdgeCorpus {
         throw new IllegalArgumentException(
           s"unknown mode: $other (want empty|tiny|nulls|unicode|dupheavy)")
     }
-    val counts = AllTables.map { t =>
+    val counts = Tables.names.map { t =>
       s""""$t":${spark.read.parquet(s"$dst/$t.parquet").count()}"""
     }.mkString(",")
     println(s"""{"edge":"$dst","mode":"$mode",$counts}""")

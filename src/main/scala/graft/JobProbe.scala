@@ -41,14 +41,16 @@ object JobProbe {
     // the catalog's first file-listing jobs belong to the session, not
     // the probed query, and without this the probe counts one job more
     // than the bench sidecar's runs do.
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { t =>
+    Tables.names.foreach { t =>
       spark.read.parquet(s"$sfDir/$t.parquet")
         .write.format("noop").mode("overwrite").save()
     }
-    Thread.sleep(1000); jobs.clear()
+    // The listener bus is async: drain it so the warm-up's events land
+    // before the clear and the probed query's before the print.
+    org.apache.spark.GraftSparkInternals.drainListenerBus(spark.sparkContext)
+    jobs.clear()
     fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-    Thread.sleep(2000) // listener bus is async; let the last events drain
+    org.apache.spark.GraftSparkInternals.drainListenerBus(spark.sparkContext)
     import scala.jdk.CollectionConverters._
     val ordered = jobs.asScala.toSeq.sortBy(_._1)
     ordered.zipWithIndex.foreach {

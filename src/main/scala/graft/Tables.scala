@@ -42,6 +42,10 @@ object Tables {
     perSession.getOrElseUpdate((dir, name), spark.read.parquet(s"$dir/$name.parquet"))
   }
 
+  /** Every testdata table, in TESTDATA.md order. */
+  val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
+    "part", "orders", "lineitem", "events", "documents", "embeddings")
+
   def region(s: SparkSession, d: String): DataFrame = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = t(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame = t(s, d, "customer")

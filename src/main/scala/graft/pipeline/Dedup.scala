@@ -92,34 +92,85 @@ object Dedup {
   }
 
   /** Segment-level exact dedup (the CCNet line-dedup / RefinedWeb
-    * paragraph-dedup shape): split each document into consecutive
-    * `segTokens`-token segments ([[TextAnalysis.segments]]), keep each
-    * distinct segment's FIRST corpus-wide occurrence (smallest
-    * `(doc_id, seg_idx)` — a total order, so the election is
-    * deterministic), and reassemble every document from its surviving
-    * segments in their original order.
+    * paragraph-dedup shape): [[electAndReassemble]] with nothing pruned —
+    * each distinct `segTokens`-token segment keeps its FIRST corpus-wide
+    * occurrence, and every document is reassembled from its survivors. */
+  def segmentDedup(docs: DataFrame, segTokens: Int = 10,
+      idCol: String = "doc_id"): DataFrame =
+    electAndReassemble(docs, segTokens, idCol)(identity)
+
+  /** Substring-grain exact dedup with BRIDGE windows — the published
+    * duplicated-span-removal shape (Lee et al., "Deduplicating Training
+    * Data Makes Language Models Better": repeated ~50-token spans
+    * removed wherever they occur) at [[segmentDedup]]'s fixed grain,
+    * closing segment dedup's boundary-straddle blind spot. A span
+    * duplicated on the token grid but STRADDLING a segment boundary
+    * leaves both adjacent base segments unique, so [[segmentDedup]]
+    * keeps every copy — exactly the straddle class q96's decon bridges
+    * closed for contamination. Same construction here: the base
+    * segments elect first-occurrence winners ([[electAndReassemble]]),
+    * and the BRIDGE windows ([[bridgeBurn]]) only DECIDE — every
+    * non-first occurrence of a bridge's content (the base election's
+    * min-`(doc_id, idx)` order: dedup removes repeats, never the
+    * canonical copy) burns the two base segments it straddles in ITS
+    * doc. Bridges never emit text, so nothing duplicates on reassembly.
+    *
+    * A duplicated span that straddles boundary j covers the bridge
+    * centered there whenever both retained halves are ≥ S/2 tokens, so
+    * any grid-aligned duplicate ≥ ~1.5·S tokens fires either a base
+    * segment or a bridge; a fired bridge burns both neighbours
+    * (conservative — the removal budget is the segment grain, exactly
+    * q96's chunk-burn contract). Shorter straddles stay below half of
+    * any window — the inherent fixed-grain floor, left to the
+    * shingle-based near-dup sweeps. Both elections group 16-byte
+    * (hash, id, idx) facts with map-side partials; text crosses no
+    * exchange. */
+  def spanDedup(docs: DataFrame, segTokens: Int = 10,
+      idCol: String = "doc_id"): DataFrame = {
+    require(segTokens > 0 && segTokens % 2 == 0,
+      s"spanDedup: segTokens must be positive and even (got $segTokens) — " +
+        "bridge windows sit at half-segment offsets")
+    val burned = bridgeBurn(docs.select(col(idCol).as("doc_id"), col("text")),
+        segTokens, idCol, "seg_idx") { windows =>
+      val bridges = windows.select(col("doc_id").as(idCol), col("chunk_id"),
+        md5Hash60(col("chunk_text")).as("h"))
+      bridges
+        .join(bridges.groupBy(col("h"))
+            .agg(min(struct(col(idCol), col("chunk_id"))).as("w")),
+          Seq("h"))
+        .filter(!(col(idCol) === col("w")(idCol) &&
+          col("chunk_id") === col("w")("chunk_id")))
+    }
+    electAndReassemble(docs, segTokens, idCol)(
+      _.join(burned, Seq(idCol, "seg_idx"), "left_anti"))
+  }
+
+  /** The fixed-grain segment pass under [[segmentDedup]] and
+    * [[spanDedup]]: split each doc into consecutive `segTokens`-token
+    * segments ([[TextAnalysis.segments]]), elect each distinct segment's
+    * FIRST corpus-wide occurrence (smallest `(doc_id, seg_idx)` — a total
+    * order, so the election is deterministic), let `prune` drop winners
+    * (a face's burn list, or nothing), and reassemble every document
+    * from its surviving segments in their original order. Docs whose
+    * every segment is gone survive with empty text and `n_kept = 0`,
+    * keeping the output a total function of the corpus.
     *
     * 100 TB shape: document text crosses NO exchange. The segment
     * relation collapses to `(hash, doc_id, seg_idx)` map-side before the
-    * first-occurrence election (one groupBy on the 60-bit hash), the
-    * winning indices aggregate back to doc grain (ids only again), and
-    * the one text-bearing operation is a doc-grain join of the corpus
-    * against that index set, where the kept segments are re-derived and
-    * filtered positionally in-row. Docs whose every segment is a repeat
-    * survive with empty text and `n_kept = 0`, keeping the output a
-    * total function of the corpus (downstream drops them with a trivial
-    * filter when that is the intent). */
-  def segmentDedup(docs: DataFrame, segTokens: Int = 10,
-      idCol: String = "doc_id"): DataFrame = {
+    * election (one groupBy on the 60-bit hash), the winning indices
+    * aggregate back to doc grain (ids only again), and the one
+    * text-bearing operation is a doc-grain join of the corpus against
+    * that index set, where the kept segments are re-derived in-row. */
+  private def electAndReassemble(docs: DataFrame, segTokens: Int,
+      idCol: String)(prune: DataFrame => DataFrame): DataFrame = {
     val segsCol = TextAnalysis.segments(col("text"), segTokens)
-    val ids = docs
+    val winners = docs
       .select(col(idCol), posexplode(segsCol).as(Seq("seg_idx", "seg")))
       .select(col(idCol), col("seg_idx"), md5Hash60(col("seg")).as("h"))
-    val winners = ids
       .groupBy(col("h"))
       .agg(min(struct(col(idCol), col("seg_idx"))).as("w"))
       .select(col("w")(idCol).as(idCol), col("w")("seg_idx").as("seg_idx"))
-    val keep = winners
+    val keep = prune(winners)
       .groupBy(col(idCol))
       .agg(collect_list(col("seg_idx")).as("keep_idx"))
     docs
@@ -131,16 +182,14 @@ object Dedup {
         // side: sort the kept indices (ascending = original segment
         // order, so the output text is byte-identical to filtering the
         // segment array) and pick each segment by position — O(n_segs
-        // + n_kept log n_kept) per row: one segmentation pass plus the
-        // sort. The previous `filter(segs, array_contains(keep_idx,
-        // i))` probed the kept list per SEGMENT: O(n_segs · n_kept),
-        // quadratic for a doc that keeps most of its segments. The
-        // one-element-transform binding evaluates the segmentation ONCE
-        // per row — `segsCol` named directly inside the picking lambda
-        // would re-split the text per kept index (the lambda-inlining
-        // trap Similarity.bindOnce documents). A doc with no surviving
-        // segments has null keep_idx; transform/concat_ws propagate it
-        // to the same "" as before.
+        // + n_kept log n_kept) per row, where probing the kept list per
+        // SEGMENT (`filter(segs, array_contains(keep_idx, i))`) is
+        // O(n_segs · n_kept). The one-element-transform binding
+        // evaluates the segmentation ONCE per row — `segsCol` named
+        // directly inside the picking lambda would re-split the text per
+        // kept index (the lambda-inlining trap Similarity.bindOnce
+        // documents). A doc with no surviving segments has null
+        // keep_idx; transform/concat_ws turn it into "".
         element_at(transform(array(segsCol), segs =>
           concat_ws(" ",
             transform(array_sort(col("keep_idx")),
@@ -148,88 +197,24 @@ object Dedup {
           .as("text_dedup"))
   }
 
-  /** Substring-grain exact dedup with BRIDGE windows — the published
-    * duplicated-span-removal shape (Lee et al., "Deduplicating Training
-    * Data Makes Language Models Better": repeated ~50-token spans
-    * removed wherever they occur) at [[segmentDedup]]'s fixed grain,
-    * closing segment dedup's boundary-straddle blind spot. A span
-    * duplicated on the token grid but STRADDLING a segment boundary
-    * leaves both adjacent base segments unique, so [[segmentDedup]]
-    * keeps every copy — exactly the straddle class q96's decon bridges
-    * closed for contamination. Same construction here:
-    *
-    *  - base segments `[i·S, (i+1)·S)` elect first-occurrence winners
-    *    (min `(doc_id, seg_idx)` — [[segmentDedup]] verbatim);
-    *  - BRIDGE windows `[j·S + S/2, (j+1)·S + S/2)` (the odd stride-S/2
-    *    windows of [[TextAnalysis.chunkDocuments]]) only DECIDE: every
-    *    non-first occurrence of a bridge's content burns the two base
-    *    segments it straddles, `(w−1)/2` and `(w+1)/2`, in ITS doc.
-    *    Bridges never emit text, so nothing duplicates on reassembly.
-    *
-    * A duplicated span that straddles boundary j covers the bridge
-    * centered there whenever both retained halves are ≥ S/2 tokens, so
-    * any grid-aligned duplicate ≥ ~1.5·S tokens fires either a base
-    * segment or a bridge; a fired bridge burns both neighbours
-    * (conservative — the removal budget is the segment grain, exactly
-    * q96's chunk-burn contract). Shorter straddles stay below half of
-    * any window — the inherent fixed-grain floor, left to the
-    * shingle-based near-dup sweeps.
-    *
-    * 100 TB shape: [[segmentDedup]]'s — text crosses no exchange; both
-    * elections group 16-byte (hash, id, idx) facts with map-side
-    * partials; burn indices aggregate back to doc grain as ids; the one
-    * text-bearing operation is the final doc-grain reassembly join. */
-  def spanDedup(docs: DataFrame, segTokens: Int = 10,
-      idCol: String = "doc_id"): DataFrame = {
-    require(segTokens > 0 && segTokens % 2 == 0,
-      s"spanDedup: segTokens must be positive and even (got $segTokens) — " +
-        "bridge windows sit at half-segment offsets")
-    val segsCol = TextAnalysis.segments(col("text"), segTokens)
-    val ids = docs
-      .select(col(idCol), posexplode(segsCol).as(Seq("seg_idx", "seg")))
-      .select(col(idCol), col("seg_idx"), md5Hash60(col("seg")).as("h"))
-    val winners = ids
-      .groupBy(col("h"))
-      .agg(min(struct(col(idCol), col("seg_idx"))).as("w"))
-      .select(col("w")(idCol).as(idCol), col("w")("seg_idx").as("seg_idx"))
-    // Bridge election: chunkDocuments' odd windows at stride S/2 cover
-    // [j·S + S/2, (j+1)·S + S/2) — window w straddles base boundary
-    // (w−1)/2 | (w+1)/2. Same min-struct first-occurrence total order
-    // as the base election; every LOSING occurrence burns its two
-    // neighbours (the winner keeps its segments — dedup removes
-    // repeats, never the canonical copy).
-    val bridges = TextAnalysis
-      .chunkDocuments(docs.select(col(idCol).as("doc_id"), col("text")),
-        maxTokens = segTokens, overlap = segTokens / 2)
-      .filter(col("chunk_id") % 2 === 1)
-      .select(col("doc_id").as(idCol), col("chunk_id"),
-        md5Hash60(col("chunk_text")).as("h"))
-    val burned = bridges
-      .join(bridges.groupBy(col("h"))
-          .agg(min(struct(col(idCol), col("chunk_id"))).as("w")),
-        Seq("h"))
-      .filter(!(col(idCol) === col("w")(idCol) &&
-        col("chunk_id") === col("w")("chunk_id")))
+  /** BRIDGE windows of a fixed grain S and their neighbour burn, for
+    * [[spanDedup]] and the surgical curation chain's chunk pass: the odd
+    * windows w of `chunkDocuments(docs, S, overlap = S/2)` cover
+    * `[j·S + S/2, (j+1)·S + S/2)`, w = 2j + 1, straddling base pieces
+    * `(w−1) div 2` and `(w+1) div 2`. `fired` maps those windows
+    * (`doc_id`, `chunk_id`, `chunk_text`, …) to the ones that fire, keyed
+    * `(idCol, chunk_id)`; each burns BOTH neighbours, one `(idCol,
+    * pieceCol)` row per burned piece. The right neighbour always exists:
+    * the generator never emits an odd w that starts past the text. */
+  private[graft] def bridgeBurn(docs: DataFrame, spanTokens: Int,
+      idCol: String, pieceCol: String)(
+      fired: DataFrame => DataFrame): DataFrame =
+    fired(TextAnalysis
+        .chunkDocuments(docs, maxTokens = spanTokens, overlap = spanTokens / 2)
+        .filter(col("chunk_id") % 2 === 1))
       .select(col(idCol),
         explode(array(expr("(chunk_id - 1) div 2"),
-          expr("(chunk_id + 1) div 2"))).as("seg_idx"))
-    val keep = winners
-      .join(burned, Seq(idCol, "seg_idx"), "left_anti")
-      .groupBy(col(idCol))
-      .agg(collect_list(col("seg_idx")).as("keep_idx"))
-    docs
-      .join(keep, Seq(idCol), "left")
-      .select(col(idCol),
-        size(segsCol).cast("long").as("n_segs"),
-        coalesce(size(col("keep_idx")), lit(0)).cast("long").as("n_kept"),
-        // In-row reassembly, segmentDedup's one-element-transform
-        // binding verbatim (segmentation evaluated once per row).
-        element_at(transform(array(segsCol), segs =>
-          concat_ws(" ",
-            transform(array_sort(col("keep_idx")),
-              i => element_at(segs, i + 1)))), 1)
-          .as("text_dedup"))
-  }
+          expr("(chunk_id + 1) div 2"))).as(pieceCol))
 
   /** Mersenne prime 2^31-1: the 2-universal minhash permutations run mod
     * P so `a*h + b` stays far below 2^63 — BIGINT-overflow-safe in any
@@ -373,11 +358,16 @@ object Dedup {
     * unchanged).
     *
     * Shuffle profile: the chain window runs over id-width (band, sig,
-    * doc_id) rows, partitioned by the SAME key as the candidate
-    * self-join (one exchange, reused); the pruning join carries id-width
-    * pairs against the (usually driver-local, broadcast) label relation;
-    * shingle-bearing work — exactJaccard — happens only on the chain and
-    * the surviving cross-component candidates. */
+    * doc_id) rows, but inside the `spanning` pin's own action, so it
+    * cannot share an exchange with the candidate self-join. q81's
+    * executed plans (sf0.01) show `sigs`' minhash aggregation once in
+    * that pin's plan and again under the candidate self-join, whose two
+    * sides share one partial-aggregation shuffle (a ReusedExchange) and
+    * each run the final merge: the shingle relation is aggregated twice
+    * and the minhash merge runs three times. The pruning join carries
+    * id-width pairs against the (usually driver-local, broadcast) label
+    * relation; shingle-bearing work — exactJaccard — happens only on the
+    * chain and the surviving cross-component candidates. */
   def confirmedPairsForClustering(sigs: DataFrame, sh: DataFrame,
                                   threshold: Double): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -873,42 +863,27 @@ object Dedup {
     * train doc_ids by per-eval-doc containment, from PRE-HASHED shingle
     * relations — public for the same one-corpus-pass reason as
     * [[contaminatedExact]]. Unlike there, `evalShingles`' doc identity
-    * MATTERS (containment is a per-eval-doc ratio) and the relation must
-    * be distinct per (doc_id, h) — [[TextAnalysis.hashedShingles]]'s
-    * contract — or `ne`/`ni` overcount. The caller owns the
-    * broadcast-small eval guard ([[decontaminateFuzzy]]'s
-    * maxEvalShingles refusal). */
+    * MATTERS (containment is a per-eval-doc ratio); the relation
+    * contracts are [[sharedShingleContainment]]'s. */
   def contaminatedByContainment(trainShingles: DataFrame,
                                 evalShingles: DataFrame,
                                 minContainment: Double): DataFrame =
-    containmentPairs(trainShingles, evalShingles)
-      .filter(col("containment") >= minContainment)
-      .select(col("doc_id")).distinct()
+    containedIds(containmentPairs(trainShingles, evalShingles), minContainment,
+      col("doc_id"))
 
   /** Every (train doc, eval doc) pair sharing ≥ 1 shingle, with its
-    * exact 6-dp containment — the AUDIT relation under
+    * exact 6-dp containment ∩/|eval| — the AUDIT relation under
     * [[contaminatedByContainment]]'s threshold decision, public because
     * an eval owner reviews WHICH benchmark docs leak and how badly, not
-    * just which train docs to drop. Same contracts as there
-    * (pre-hashed distinct shingle relations, broadcast-small eval);
-    * pair count is bounded by shared-shingle pairs, so the relation is
-    * report-sized against a benchmark eval set. Containment quantizes
-    * in exact integer micro-units (the [[exactJaccard]] tie rule), so
-    * the value — not just the threshold verdict — is engine-exact. */
+    * just which train docs to drop. Pair count is bounded by
+    * shared-shingle pairs, so the relation is report-sized against a
+    * benchmark eval set; the eval sizes broadcast with the eval side.
+    * Relation contracts and quantization: [[sharedShingleContainment]]. */
   def containmentPairs(trainShingles: DataFrame,
-                       evalShingles: DataFrame): DataFrame = {
-    val evalSizes = evalShingles.groupBy(col("doc_id").as("eval_id"))
-      .agg(count(lit(1)).as("ne"))
-    trainShingles
-      .join(broadcast(evalShingles.select(col("doc_id").as("eval_id"), col("h"))),
-        Seq("h"))
-      .groupBy(col("doc_id"), col("eval_id")).agg(count(lit(1)).as("ni"))
-      .join(broadcast(evalSizes), Seq("eval_id"))
-      // exact integer 6-dp half-up (the exactJaccard tie rule)
-      .select(col("doc_id"), col("eval_id"),
-        (expr("(2000000 * ni + ne) div (2 * ne)") / lit(1000000.0))
-          .as("containment"))
-  }
+                       evalShingles: DataFrame): DataFrame =
+    sharedShingleContainment(trainShingles, evalShingles,
+      broadcast(evalShingles.groupBy(col("doc_id").as("eval_id"))
+        .agg(count(lit(1)).as("ne"))))
 
   /** Every (train span, eval doc) pair sharing ≥ 1 shingle, with the
     * exact 6-dp SPAN containment ∩/|train| — the TRANSPOSE of
@@ -921,23 +896,12 @@ object Dedup {
     * corpus-side agg joined back on the span id (the shared-shingle
     * pair relation is report-sized against a benchmark eval set, so
     * AQE broadcasts it, not the corpus) and the eval side broadcasts —
-    * the same scale shape as every decontamination face. Same
-    * contracts as [[containmentPairs]]: pre-hashed DISTINCT (id, h)
-    * relations, caller owns the broadcast-small eval guard; same
-    * integer micro-unit quantization, so the value is engine-exact. */
+    * the same scale shape as every decontamination face. Relation
+    * contracts and quantization: [[sharedShingleContainment]]. */
   def spanContainmentPairs(trainShingles: DataFrame,
-                           evalShingles: DataFrame): DataFrame = {
-    val trainSizes = trainShingles.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("nt"))
-    trainShingles
-      .join(broadcast(evalShingles.select(col("doc_id").as("eval_id"), col("h"))),
-        Seq("h"))
-      .groupBy(col("doc_id"), col("eval_id")).agg(count(lit(1)).as("ni"))
-      .join(trainSizes, Seq("doc_id"))
-      .select(col("doc_id"), col("eval_id"),
-        (expr("(2000000 * ni + nt) div (2 * nt)") / lit(1000000.0))
-          .as("containment"))
-  }
+                           evalShingles: DataFrame): DataFrame =
+    sharedShingleContainment(trainShingles, evalShingles,
+      trainShingles.groupBy(col("doc_id")).agg(count(lit(1)).as("nt")))
 
   /** Span ids whose containment OF EVAL TEXT reaches the threshold —
     * the decision face over [[spanContainmentPairs]], the surgical
@@ -946,9 +910,54 @@ object Dedup {
     * whole doc for one embedded benchmark string. */
   def contaminatedSpans(trainShingles: DataFrame, evalShingles: DataFrame,
                         minContainment: Double): DataFrame =
-    spanContainmentPairs(trainShingles, evalShingles)
-      .filter(col("containment") >= minContainment)
-      .select(col("doc_id")).distinct()
+    containedIds(spanContainmentPairs(trainShingles, evalShingles),
+      minContainment, col("doc_id"))
+
+  /** [[contaminatedSpans]] at chunk grain: the `(doc_id, chunk_id)` rows
+    * of a [[TextAnalysis.chunkDocuments]] relation whose ∩/|chunk| ratio
+    * against some eval doc (`evalShingles`, hashed at `shingleN`)
+    * reaches `minContainment`. Shingles are keyed by the `(doc_id,
+    * chunk_id)` struct, unpacked BEFORE the distinct so the result is
+    * partitioned on the caller's anti-join keys. Chunks under `shingleN`
+    * tokens never shingle, so they survive by contract. */
+  private[graft] def contaminatedChunks(chunks: DataFrame,
+      evalShingles: DataFrame, shingleN: Int,
+      minContainment: Double): DataFrame =
+    containedIds(
+      spanContainmentPairs(
+        TextAnalysis.hashedShingles(
+          chunks.select(struct(col("doc_id"), col("chunk_id")).as("doc_id"),
+            col("chunk_text").as("text")), shingleN),
+        evalShingles),
+      minContainment,
+      col("doc_id")("doc_id").as("doc_id"), col("doc_id")("chunk_id").as("chunk_id"))
+
+  /** The shared-shingle count under both containment ratios (the
+    * candidate-and-count shape of an overlap set-similarity join): the
+    * broadcast eval shingles probe the train shingles, `ni` counts per
+    * (doc_id, eval_id), and `sizes` — (key, n) for one side — is the
+    * denominator. Both relations must be DISTINCT per (doc_id, h)
+    * ([[TextAnalysis.hashedShingles]]'s contract) or the counts inflate;
+    * the caller owns the broadcast-small eval guard
+    * ([[decontaminateFuzzy]]'s maxEvalShingles refusal). */
+  private def sharedShingleContainment(trainShingles: DataFrame,
+      evalShingles: DataFrame, sizes: DataFrame): DataFrame = {
+    val Array(key, n) = sizes.columns
+    trainShingles
+      .join(broadcast(evalShingles.select(col("doc_id").as("eval_id"), col("h"))),
+        Seq("h"))
+      .groupBy(col("doc_id"), col("eval_id")).agg(count(lit(1)).as("ni"))
+      .join(sizes, Seq(key))
+      // exact integer 6-dp half-up (the exactJaccard tie rule), so the
+      // value, not just a threshold verdict, is engine-exact
+      .select(col("doc_id"), col("eval_id"),
+        (expr(s"(2000000 * ni + $n) div (2 * $n)") / lit(1000000.0))
+          .as("containment"))
+  }
+
+  private def containedIds(pairs: DataFrame, minContainment: Double,
+      ids: Column*): DataFrame =
+    pairs.filter(col("containment") >= minContainment).select(ids: _*).distinct()
 
   /** All-pairs n-gram Jaccard via shingle equi-join — QUADRATIC in docs
     * sharing a shingle; the small-scale baseline the LSH path is verified

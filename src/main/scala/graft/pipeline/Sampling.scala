@@ -50,7 +50,7 @@ object Sampling {
     * same hashes, same deals. Callers own '#'-collision hygiene
     * (an id containing '#' could alias a composite; ids here are
     * numeric/uuid-shaped by contract). */
-  private def compositeKey(idCols: Seq[String]): Column = {
+  private[graft] def compositeKey(idCols: Seq[String]): Column = {
     require(idCols.nonEmpty, "at least one id column required")
     idCols.map(c => col(c).cast("string"))
       .reduceLeft((a, b) => concat(a, lit("#"), b))

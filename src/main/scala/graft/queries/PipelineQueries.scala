@@ -1592,11 +1592,7 @@ object PipelineQueries {
       (s, dir) => {
         val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
         val train = docs.filter(col("doc_id") >= 100)
-        val toks = TextAnalysis.tokens(col("text"))
-        val evalD = docs.filter(col("doc_id") >= 100 && col("doc_id") < 120)
-          .select((col("doc_id") - 100).as("doc_id"),
-            array_join(slice(toks, lit(1), greatest(size(toks) - 10, lit(3))), " ")
-              .as("text"))
+        val evalD = embeddedEval(docs)
         Dedup.decontaminateFuzzy(train, evalD,
           shingleN = 3, minContainment = 0.5)
           .select(col("doc_id"), length(col("text")).cast("long").as("text_len"))
@@ -2268,8 +2264,7 @@ object PipelineQueries {
           maxTokens = 32, overlap = 8)
         val keyed = chunks.select(col("doc_id"), col("chunk_id"),
           col("n_chunk_tokens"),
-          concat(col("doc_id").cast("string"), lit("#"),
-            col("chunk_id").cast("string")).as("chunk_key"))
+          Sampling.compositeKey(Seq("doc_id", "chunk_id")).as("chunk_key"))
         val withSplit = Sampling.assignSplit(keyed, "doc_id",
           Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
         // Pinned: three per-split pack consumers below would otherwise
@@ -2401,11 +2396,7 @@ object PipelineQueries {
     Q("q85_decontaminate_dual",
       (s, dir) => {
         val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        val toks = TextAnalysis.tokens(col("text"))
-        val evalD = docs.filter(col("doc_id") >= 100 && col("doc_id") < 120)
-          .select((col("doc_id") - 100).as("doc_id"),
-            array_join(slice(toks, lit(1), greatest(size(toks) - 10, lit(3))), " ")
-              .as("text"))
+        val evalD = embeddedEval(docs)
         // the compilation doc: deterministic fragment order via the
         // sorted (doc_id, frag) structs; empty corpora filter it out.
         // Only eval docs of ≥ 24 tokens contribute a fragment — a
@@ -2591,11 +2582,7 @@ object PipelineQueries {
       (s, dir) => {
         val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
         val train = docs.filter(col("doc_id") >= 100)
-        val toks = TextAnalysis.tokens(col("text"))
-        val evalD = docs.filter(col("doc_id") >= 100 && col("doc_id") < 120)
-          .select((col("doc_id") - 100).as("doc_id"),
-            array_join(slice(toks, lit(1), greatest(size(toks) - 10, lit(3))), " ")
-              .as("text"))
+        val evalD = embeddedEval(docs)
         val shE = graft.Pin.ser(TextAnalysis.hashedShingles(evalD, 3))
         val pairs = Dedup.containmentPairs(
           TextAnalysis.hashedShingles(train, 3), shE)
@@ -2766,10 +2753,9 @@ object PipelineQueries {
     // TRANSPOSED ratio: a fully-plagiarized 64-token chunk of a
     // 200-token eval doc never reaches 0.5 on ∩/|eval|, so the decision
     // runs on `spanContainmentPairs`' ∩/|chunk| ("how much of this
-    // chunk IS benchmark text"). Chunk identity is the '#'-joined
-    // composite string key (the q82/q91 convention), so the shingle
-    // faces run unchanged at chunk grain; chunks too short to shingle
-    // (< 3 tokens) can never be contaminated and survive by contract.
+    // chunk IS benchmark text"), through Dedup.contaminatedChunks;
+    // chunks too short to shingle (< 3 tokens) can never be
+    // contaminated and survive by contract.
     Q("q93_chunk_decontaminate",
       (s, dir) => {
         val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
@@ -2777,14 +2763,9 @@ object PipelineQueries {
         val pool = docs.filter(col("doc_id") >= 20)
         val chunks = graft.Pin.ser(
           TextAnalysis.chunkDocuments(pool, maxTokens = 64, overlap = 0))
-        val ckey = concat(col("doc_id").cast("string"), lit("#"),
-          col("chunk_id").cast("string"))
-        val csh = TextAnalysis.hashedShingles(
-          chunks.select(ckey.as("doc_id"), col("chunk_text").as("text")), 3)
-        val bad = Dedup.contaminatedSpans(csh,
-            TextAnalysis.hashedShingles(evalDocs, 3), minContainment = 0.5)
-          .select(col("doc_id").as("__ck"))
-        chunks.join(bad, ckey === col("__ck"), "left_anti")
+        chunks.join(Dedup.contaminatedChunks(chunks,
+            TextAnalysis.hashedShingles(evalDocs, 3), 3, 0.5),
+            Seq("doc_id", "chunk_id"), "left_anti")
           .select(col("doc_id"), col("chunk_id"), col("n_chunk_tokens"))
       },
       Some(s"""WITH t93 AS (
@@ -3470,6 +3451,18 @@ object PipelineQueries {
     (pool, evalDocs, feats, sh, keptIds)
   }
 
+  /** The planted "benchmark" of the embedded-eval queries (q84, q85,
+    * q89): train docs 100–119 re-keyed to eval ids 0–19, each TRUNCATED
+    * to all but its last 10 tokens (at least 3 kept, so every eval doc
+    * still shingles). Its containment in its source doc is exactly 1.0. */
+  private def embeddedEval(docs: DataFrame): DataFrame = {
+    val toks = TextAnalysis.tokens(col("text"))
+    docs.filter(col("doc_id") >= 100 && col("doc_id") < 120)
+      .select((col("doc_id") - 100).as("doc_id"),
+        array_join(slice(toks, lit(1), greatest(size(toks) - 10, lit(3))), " ")
+          .as("text"))
+  }
+
   private def curationV2(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val (pool, evalDocs, feats, sh, keptIds) = curationKept(s, dir)
     // Stage 4 — containment decontamination on the SAME shingles.
@@ -3493,19 +3486,19 @@ object PipelineQueries {
     * A doc with one embedded benchmark string loses THAT chunk and
     * keeps the rest — v2 burns all of it; conversely a chunk that IS
     * mostly benchmark text drops even when the doc-grain eval-side
-    * ratio never fires. Chunk identity is the '#'-composite key
-    * (q82/q91 convention) so the shingle faces run unchanged; chunks
-    * too short to shingle (< 3 tokens) can never be contaminated and
-    * survive by contract.
+    * ratio never fires. Both passes are [[Dedup.contaminatedChunks]];
+    * chunks too short to shingle (< 3 tokens) can never be
+    * contaminated and survive by contract.
     *
     * BRIDGE WINDOWS (r17, closing the r16 straddle miss): an implant
     * straddling a 64-token chunk boundary can leave BOTH halves under
     * the 0.5 chunk ratio — the honest recall gap BENCH_NOTES_r16
     * quantified. The decision pass therefore also scores the odd
-    * stride-32 windows of `chunkDocuments(…, 64, overlap = 32)` — each
-    * covers `[64j+32, 64j+96)`, centered on boundary j|j+1. When the
-    * halves both fall under the chunk threshold the implant lies
-    * entirely inside that bridge (each half < 32 tokens), so any
+    * stride-32 windows of `chunkDocuments(…, 64, overlap = 32)`
+    * ([[Dedup.bridgeBurn]]) — each covers `[64j+32, 64j+96)`, centered
+    * on boundary j|j+1. When the halves both fall under the chunk
+    * threshold the implant lies entirely inside that bridge (each half
+    * < 32 tokens), so any
     * implant ≥ ~33 tokens fires it; a fired bridge burns BOTH adjacent
     * base chunks (conservative by design — the surgical budget is the
     * chunk grain, not half-chunks). Implants under ~33 tokens are below
@@ -3531,35 +3524,14 @@ object PipelineQueries {
       .join(keptIds, Seq("doc_id"), "left_semi"))
     val chunks = graft.Pin.ser(
       TextAnalysis.chunkDocuments(keptText, maxTokens = 64, overlap = 0))
-    val ckey = concat(col("doc_id").cast("string"), lit("#"),
-      col("chunk_id").cast("string"))
-    val csh = TextAnalysis.hashedShingles(
-      chunks.select(ckey.as("doc_id"), col("chunk_text").as("text")), 3)
     val esh = TextAnalysis.hashedShingles(evalDocs, 3)
-    val bad = Dedup.contaminatedSpans(csh, esh, minContainment = 0.5)
-      .select(col("doc_id").as("__ck"))
-    // Bridge decisions: odd stride-32 windows; a fired bridge w burns
-    // base chunks (w−1)/2 and (w+1)/2. The right neighbour always
-    // exists (the window generator never emits an odd w whose second
-    // half starts past the text), and a phantom key would anyway
-    // anti-join to nothing.
-    val bridges = TextAnalysis
-      .chunkDocuments(keptText, maxTokens = 64, overlap = 32)
-      .filter(col("chunk_id") % 2 === 1)
-    val bkey = concat(col("doc_id").cast("string"), lit("#"),
-      col("chunk_id").cast("string"))
-    val bsh = TextAnalysis.hashedShingles(
-      bridges.select(bkey.as("doc_id"), col("chunk_text").as("text")), 3)
-    val badBridge = Dedup.contaminatedSpans(bsh, esh, minContainment = 0.5)
-      .select(split(col("doc_id"), "#").getItem(0).as("__d"),
-        split(col("doc_id"), "#").getItem(1).cast("long").as("__w"))
-      .select(col("__d"),
-        explode(array(expr("(__w - 1) div 2"), expr("(__w + 1) div 2")))
-          .as("__j"))
-      .select(concat(col("__d"), lit("#"), col("__j").cast("string"))
-        .as("__ck"))
+    val bad = Dedup.contaminatedChunks(chunks, esh, 3, 0.5)
+    // Bridge decisions: odd stride-32 windows at the same ratio; a fired
+    // bridge burns both base chunks it straddles.
+    val badBridge = Dedup.bridgeBurn(keptText, 64, "doc_id", "chunk_id")(
+      Dedup.contaminatedChunks(_, esh, 3, 0.5))
     val surviving = chunks
-      .join(bad.unionByName(badBridge).distinct(), ckey === col("__ck"),
+      .join(bad.unionByName(badBridge).distinct(), Seq("doc_id", "chunk_id"),
         "left_anti")
       .select(col("doc_id"), col("chunk_id"), col("n_chunk_tokens"))
     Sampling.packBudget(surviving, Seq("doc_id", "chunk_id"),

@@ -20,11 +20,16 @@ package graft
   * marker collision (a real NULL lang base row is NOT a subtotal). */
 class EdgeCorpusSpec extends SparkSpec {
 
-  private def corpus(mode: String): String = {
+  // One generated directory per mode for the whole suite: the cases
+  // that reuse a mode (empty, nulls) only read it after the registry
+  // run, so a second generation would rebuild identical bytes.
+  private val corpora = scala.collection.mutable.Map.empty[String, String]
+
+  private def corpus(mode: String): String = corpora.getOrElseUpdate(mode, {
     val dir = java.nio.file.Files.createTempDirectory(s"edge_$mode").toString
     EdgeCorpus.run(spark, "/root/testdata/sf0.001", dir, mode)
     dir
-  }
+  })
 
   private def runRegistry(dir: String): Seq[(String, Throwable)] =
     SparkEntry.queries.toSeq.flatMap { case (name, fn) =>

@@ -169,4 +169,26 @@ class PlanAuditSpec extends SparkSpec {
       s"\n'$phrase' in ${guards.length} files:\n" + guards.mkString("\n") +
         "\nstore calls in the near-dup index modules:\n" + writes.mkString("\n"))
   }
+
+  test("the '#' composite key is built only by Sampling.compositeKey, and the " +
+      "span family's containment decision and segmentation have one call site each") {
+    // The fixed-grain span family (segment/span dedup, chunk-grain
+    // decontamination with bridge windows) writes each step once in
+    // Dedup. A hand-written '#' key outside compositeKey's file, or a
+    // second contaminatedSpans/segments call, is a re-forked copy of
+    // one of those steps that can drift from it.
+    val all = sources(mainRoot)
+    val keyHome = all.filter(f => callSites(Seq(f), Seq("def compositeKey(")).nonEmpty)
+    assert(keyHome.length == 1, s"compositeKey defined in ${keyHome.length} files")
+    val keys = callSites(all.filterNot(keyHome.contains), Seq("lit(\"#\")"))
+    val forks = Seq("contaminatedSpans(", "TextAnalysis.segments(").flatMap { call =>
+      val defs = callSites(all, Seq(s"def $call"))
+      val uses = callSites(all, Seq(call)).filterNot(defs.contains)
+      if (uses.length > 1) Seq(s"$call called from ${uses.length} places:\n" + uses.mkString("\n"))
+      else Nil
+    }
+    assert(keys.isEmpty && forks.isEmpty,
+      "\nlit(\"#\") outside Sampling.compositeKey:\n" + keys.mkString("\n") +
+        "\n" + forks.mkString("\n"))
+  }
 }
