@@ -1,10 +1,13 @@
 package graft
 
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Per-job scheduler diagnostic for one registry query: run it once
   * and print one ORDERED line per Spark job — index, task count, and
-  * the job's callsite (its final stage's name) — plus a grouped
+  * the job's callsite (the first graft frame outside `Pin` that started
+  * its SQL execution, else its final stage's name) — plus a grouped
   * callsite summary. Separates "the plan is heavy" from "the query is
   * many small actions", and when the bench sidecar's job COUNT shifts
   * between two data scales (e.g. q49's 47 jobs at sf0.1 vs 49 at the
@@ -28,12 +31,24 @@ object JobProbe {
     val fn = SparkEntry.queries.getOrElse(qName,
       sys.error(s"unknown query: $qName"))
 
+    // AQE runs a query's stage and broadcast jobs on a thread pool, so a
+    // job is named after the graft frame that started its SQL execution
+    // (outside Pin: a pin is not the operator it materializes).
+    val sites = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (String, Int)]()
     spark.sparkContext.addSparkListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          s.details.split("\n").map(_.trim)
+            .find(f => f.startsWith("graft.") && !f.matches("""graft\.Pin\$?\..*"""))
+            .foreach(sites.put(s.executionId.toString, _))
+        case _ =>
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val site = e.stageInfos.lastOption.map(_.name).getOrElse("?")
-        val nTasks = e.stageInfos.map(_.numTasks).sum
-        jobs.put(e.jobId, (site, nTasks))
+        val site = Option(e.properties)
+          .flatMap(p => Option(sites.get(p.getProperty(SQLExecution.EXECUTION_ID_KEY, ""))))
+          .orElse(e.stageInfos.lastOption.map(_.name)).getOrElse("?")
+        jobs.put(e.jobId, (site, e.stageInfos.map(_.numTasks).sum))
         ()
       }
     })

@@ -79,11 +79,6 @@ object Ingest {
       .withColumn("market_cap", col("share_price") * col("effective_shares_outstanding"))
       .select("ticker", "date", "share_price", "market_cap", "effective_shares_outstanding")
   }
-
-  /** S6/S7: `INSERT OR REPLACE` last-write-wins upsert. */
-  def upsert(existing: DataFrame, incoming: DataFrame, keys: Seq[String],
-             version: Seq[Column]): DataFrame =
-    CoreOps.upsertLastWins(existing, incoming, keys, version)
 }
 
 object IndexCalculator {
@@ -114,45 +109,60 @@ object IndexCalculator {
 }
 
 object Analytics {
-  /** W3+W4 (`dashboard.py:193-201`): daily and cumulative percent returns.
-    * Single ordered window — the index series is one row per date (30 in
-    * the reference; at scale, callers partition by instrument first). */
-  def summaryMetrics(indexData: DataFrame): DataFrame = {
-    val ordered = Seq(col("date"))
-    val withDaily = CoreOps.lagReturn(indexData, Nil, ordered, col("index_value"), "daily_return")
-    CoreOps.returnFromFirst(withDaily, Nil, ordered, col("index_value"), "cumulative_return")
-  }
+  // Each derived dashboard column is defined once, here, over the one date
+  // order of the index series (one row per date: the sanctioned global
+  // window). Columns resolve lazily, so a bare `(date, index_value)`
+  // series serves the value faces.
+  private val byDate = Window.orderBy(col("date"))
+  private val value = col("index_value")
+  private val prevValue = lag(value, 1).over(byDate)
+  private def percentFrom(base: Column): Column = (value - base) / base * 100
+
+  /** W3 (`dashboard.py:196`): null on the first date. */
+  private[marketviz] val dailyReturn: Column = percentFrom(prevValue)
+
+  /** W4 (`dashboard.py:198-200`). */
+  private[marketviz] val cumulativeReturn: Column = percentFrom(
+    first(value).over(byDate.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+
+  /** W6/W7: adds the previous date's composition (`prev`) and the
+    * order-preserving diff against it (`added`, `removed`). */
+  private[graft] def compositionDiff(indexData: DataFrame): DataFrame =
+    CoreOps.lagArrayDiff(indexData, Nil, Seq(col("date")), col("composition"))
+
+  /** The export sheet's change string over [[compositionDiff]]: W7's with
+    * the added/removed roles swapped ([[Exports]] says why). */
+  private[graft] val exportChange: Column = CoreOps.changeString(col("removed"), col("added"))
+
+  /** W3+W4 (`dashboard.py:193-201`): daily and cumulative percent returns. */
+  def summaryMetrics(indexData: DataFrame): DataFrame =
+    indexData.withColumn("daily_return", dailyReturn)
+      .withColumn("cumulative_return", cumulativeReturn)
 
   /** The headline stat tiles (`dashboard.py:146-156`): latest index value,
     * absolute daily change, percent daily return — last two rows of the
     * ordered series, as one row. */
-  def statistics(indexData: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("date"))
-    indexData
-      .withColumn("prev", lag(col("index_value"), 1).over(w))
+  def statistics(indexData: DataFrame): DataFrame =
+    indexData.withColumn("prev", prevValue)
       .orderBy(col("date").desc).limit(1)
-      .select(
-        col("index_value").as("current_value"),
-        (col("index_value") - col("prev")).as("daily_change"),
-        ((col("index_value") - col("prev")) / col("prev") * 100).as("daily_return"))
-  }
+      .select(value.as("current_value"), (value - col("prev")).as("daily_change"),
+        percentFrom(col("prev")).as("daily_return"))
 
   /** W6 (`dashboard.py:158-172`): dates whose constituent SET differs from
     * the previous date's (order changes alone don't count — the reference
     * compares `set(...)`). */
-  def compositionChangeDates(indexData: DataFrame): DataFrame =
-    CoreOps.lagSetDiff(indexData.select(col("date"), col("composition").as("arr")),
-        Nil, Seq(col("date")), col("arr"))
-      .filter(col("prev").isNotNull && (size(col("added")) > 0 || size(col("removed")) > 0))
+  def compositionChangeDates(indexData: DataFrame): DataFrame = {
+    val (cur, prev) = (col("composition"), col("prev"))
+    compositionDiff(indexData).filter(prev.isNotNull &&
+        (size(array_except(cur, prev)) > 0 || size(array_except(prev, cur)) > 0))
       .select("date")
+  }
 
   /** W7 (`dashboard.py:174-190`): per-date `+(added) , -(removed)` strings,
     * order-preserving, `-` for unchanged and for the first date. */
   def compositionChanges(indexData: DataFrame): DataFrame =
-    CoreOps.lagArrayDiff(indexData.select(col("date"), col("composition").as("arr")),
-        Nil, Seq(col("date")), col("arr"))
-      .select(col("date"),
-        CoreOps.changeString(col("added"), col("removed")).as("composition_changes"))
+    compositionDiff(indexData).select(col("date"),
+      CoreOps.changeString(col("added"), col("removed")).as("composition_changes"))
 
   /** J2+A4+P10 (`dashboard.py:88-144`): market-cap distribution of the
     * latest composition — top-`k` constituents individually (cap in
@@ -187,74 +197,69 @@ object Analytics {
 }
 
 /** §5's golden report shapes — the three xlsx sheets the reference commits
-  * (`dashboard.py:203-226`), as DataFrames; actual file emission is an
-  * export boundary (see [[SheetWriter]]).
+  * (`dashboard.py:203-226`), as projections of one newest-first frame
+  * ([[workbook]]) whose columns are the dashboard's; actual file emission
+  * is an export boundary (see [[SheetWriter]]).
   *
   * Row order: the reference reverses its metrics frame to NEWEST-FIRST
   * before exporting (`dashboard.py:372` then `:387`), so all three sheets
-  * are `Date` descending. */
+  * are `Date` descending.
+  *
+  * The changes sheet's alignment is NOT the dashboard's: the reference
+  * RE-runs `_get_composition_changes_tickers` inside `_export_to_excel`
+  * (`dashboard.py:217`) on the frame that was already reversed to
+  * newest-first (`dashboard.py:372`), so on the export sheet each row's
+  * "prev" neighbor is the OLDER date and the diff comes out inverted —
+  * row at date d is labeled `+(comp(older) \ comp(d)) , -(comp(d) \
+  * comp(older))` (chronologically-removed tickers appear under '+'),
+  * and the length-pad '-' (`dashboard.py:188-190`) lands on the OLDEST
+  * row. Verified cell-for-cell against the committed golden
+  * `index_data.xlsx` sheet 3 (e.g. the 11-29→12-02 transition shows
+  * `+(TTE) , -(PANW)` on 2024-12-02 though PANW was the one added).
+  * That is exactly the date-ASC diff with the added/removed roles
+  * SWAPPED in the label ([[Analytics.exportChange]]); in-paren order
+  * follows the source arrays (older comp for '+', current comp for '-'),
+  * which the order-preserving diff keeps. The chronological/display
+  * alignment (W7) lives in [[Analytics.compositionChanges]]. */
 object Exports {
-  def performanceSheet(indexData: DataFrame): DataFrame =
-    Analytics.summaryMetrics(indexData)
+  /** The golden workbook's three sheets, by their committed names, each
+    * with its header row: column names of [[workbook]]. */
+  private[marketviz] val sheets: Seq[(String, Seq[String])] = Seq(
+    "Performance" -> Seq("Date", "Price", "Daily Return (%)", "Cumulative Return (%)"),
+    "Composition" -> Seq("Date", "Composition"),
+    "Composition Changes" -> Seq("Date", "Composition Changes"))
+
+  /** Every sheet's columns in one newest-first frame. */
+  private[marketviz] def workbook(indexData: DataFrame): DataFrame =
+    Analytics.compositionDiff(indexData)
       .select(col("date").as("Date"), col("index_value").as("Price"),
-        col("daily_return").as("Daily Return (%)"),
-        col("cumulative_return").as("Cumulative Return (%)"))
+        Analytics.dailyReturn.as("Daily Return (%)"),
+        Analytics.cumulativeReturn.as("Cumulative Return (%)"),
+        array_join(col("composition"), ",").as("Composition"),
+        Analytics.exportChange.as("Composition Changes"))
       .orderBy(col("Date").desc)
 
-  def compositionSheet(indexData: DataFrame): DataFrame =
-    indexData.select(col("date").as("Date"),
-      array_join(col("composition"), ",").as("Composition")).orderBy(col("Date").desc)
+  private def sheet(indexData: DataFrame, name: String): DataFrame =
+    workbook(indexData).select(sheets.toMap.apply(name).map(col): _*)
 
-  /** The export sheet's alignment is NOT the dashboard's: the reference
-    * RE-runs `_get_composition_changes_tickers` inside `_export_to_excel`
-    * (`dashboard.py:217`) on the frame that was already reversed to
-    * newest-first (`dashboard.py:372`), so on the export sheet each row's
-    * "prev" neighbor is the OLDER date and the diff comes out inverted —
-    * row at date d is labeled `+(comp(older) \ comp(d)) , -(comp(d) \
-    * comp(older))` (chronologically-removed tickers appear under '+'),
-    * and the length-pad '-' (`dashboard.py:188-190`) lands on the OLDEST
-    * row. Verified cell-for-cell against the committed golden
-    * `index_data.xlsx` sheet 3 (e.g. the 11-29→12-02 transition shows
-    * `+(TTE) , -(PANW)` on 2024-12-02 though PANW was the one added).
-    * That is exactly [[CoreOps.lagArrayDiff]] over date ASC with the
-    * added/removed roles SWAPPED in the label; in-paren order follows the
-    * source arrays (older comp for '+', current comp for '-'), which the
-    * order-preserving diff keeps. The chronological/display
-    * alignment (W7) lives in [[Analytics.compositionChanges]]. Global
-    * window is the sanctioned date-grain single series. */
-  def changesSheet(indexData: DataFrame): DataFrame =
-    CoreOps.lagArrayDiff(
-        indexData.select(col("date"), col("composition").as("arr")),
-        part = Nil, order = Seq(col("date")), col("arr"))
-      .select(col("date").as("Date"),
-        CoreOps.changeString(col("removed"), col("added")).as("Composition Changes"))
-      .orderBy(col("Date").desc)
+  def performanceSheet(indexData: DataFrame): DataFrame = sheet(indexData, "Performance")
+
+  def compositionSheet(indexData: DataFrame): DataFrame = sheet(indexData, "Composition")
+
+  def changesSheet(indexData: DataFrame): DataFrame = sheet(indexData, "Composition Changes")
 }
 
 /** S9 file emission. The reference writes one xlsx with three sheets via
   * xlsxwriter (`dashboard.py:203-226`); `writeXlsx` reproduces that as a
   * real `index_data.xlsx` — same workbook shape (sheet names, header row,
-  * newest-first rows) — via the dependency-free [[XlsxWriter]].
-  * `writeAll` keeps the CSV-per-sheet form for pipelines that want
-  * re-readable plain text. `coalesce(1)` / driver collect is deliberate:
-  * a report sheet is dashboard-sized output (the reference exports 30
-  * rows), not data-plane output — the upstream plan still computes
-  * distributed. */
+  * newest-first rows) — via the dependency-free [[XlsxWriter]]. One Spark
+  * plan feeds all three sheets: [[Exports.workbook]] holds every sheet's
+  * columns, and the writer collects it to the driver once and cuts each
+  * sheet from the same rows. The driver collect is deliberate: a report
+  * is dashboard-sized output (the reference exports 30 rows), not
+  * data-plane output — the upstream plan still computes distributed. */
 object SheetWriter {
-  /** The golden workbook's three sheets, by their committed names. */
-  def sheets(indexData: DataFrame): Seq[(String, DataFrame)] = Seq(
-    "Performance" -> Exports.performanceSheet(indexData),
-    "Composition" -> Exports.compositionSheet(indexData),
-    "Composition Changes" -> Exports.changesSheet(indexData))
-
   /** One `.xlsx` workbook, three sheets — the reference's export file. */
   def writeXlsx(indexData: DataFrame, file: String): Unit =
-    XlsxWriter.write(indexData.sparkSession, sheets(indexData), file)
-
-  def writeAll(indexData: DataFrame, dir: String): Unit =
-    sheets(indexData).foreach { case (name, df) => write(df, s"$dir/$name") }
-
-  private def write(sheet: DataFrame, path: String): Unit =
-    sheet.coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("header", "true").csv(path)
+    XlsxWriter.write(Exports.workbook(indexData), Exports.sheets, file)
 }

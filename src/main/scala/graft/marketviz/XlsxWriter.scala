@@ -13,18 +13,24 @@ import java.util.zip.{ZipEntry, ZipOutputStream}
   * three sheets via xlsxwriter) without a spreadsheet jar on the
   * classpath — swap for spark-excel's `.format("excel")` when one exists.
   *
-  * Report-boundary contract: each sheet is COLLECTED to the driver (the
-  * reference exports 30 rows; `maxRows` guards against misuse as a
-  * data-plane sink — the upstream plan still computes distributed). The
-  * file goes through the Hadoop FileSystem API, so HDFS/S3 paths work.
+  * Report-boundary contract: one frame is COLLECTED to the driver, once;
+  * each `(name, columns)` sheet is those columns of its rows, in order,
+  * under a header row of the column names — one Spark plan per workbook.
+  * The collect stops at `MaxRows + 1` rows, so a frame misused as a
+  * data-plane sink fails before it fills the driver (the reference
+  * exports 30 rows). The file goes through the Hadoop FileSystem API, so
+  * HDFS/S3 paths work.
   */
 object XlsxWriter {
+  private[marketviz] val MaxRows = 100000
 
-  def write(spark: org.apache.spark.sql.SparkSession,
-            sheets: Seq[(String, DataFrame)], path: String,
-            maxRows: Int = 100000): Unit = {
+  def write(frame: DataFrame, sheets: Seq[(String, Seq[String])], path: String): Unit = {
+    val rows = frame.limit(MaxRows + 1).collect()
+    require(rows.length <= MaxRows,
+      s"xlsx is a report sink: ${rows.length} rows exceeds maxRows=$MaxRows " +
+        "(write data-plane output as parquet)")
     val p = new HPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(frame.sparkSession.sparkContext.hadoopConfiguration)
     val out = new ZipOutputStream(fs.create(p, true))
     try {
       def part(name: String, body: String): Unit = {
@@ -60,17 +66,15 @@ object XlsxWriter {
           (1 to n).map(i =>
             s"""<Relationship Id="rId$i" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet$i.xml"/>""").mkString +
           "</Relationships>")
-      sheets.zipWithIndex.foreach { case ((_, df), i) =>
-        part(s"xl/worksheets/sheet${i + 1}.xml", sheetXml(df, maxRows))
+      sheets.zipWithIndex.foreach { case ((_, columns), i) =>
+        val idx = columns.map(frame.schema.fieldIndex)
+        part(s"xl/worksheets/sheet${i + 1}.xml", sheetXml(columns,
+          rows.toSeq.map(r => idx.map(j => if (r.isNullAt(j)) null else r.get(j)))))
       }
     } finally out.close()
   }
 
-  private def sheetXml(df: DataFrame, maxRows: Int): String = {
-    val rows = df.collect()
-    require(rows.length <= maxRows,
-      s"xlsx is a report sink: ${rows.length} rows exceeds maxRows=$maxRows " +
-        "(write data-plane output as parquet)")
+  private def sheetXml(header: Seq[String], rows: Seq[Seq[Any]]): String = {
     val sb = new StringBuilder(
       """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
         """<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>""")
@@ -106,10 +110,8 @@ object XlsxWriter {
       }
       sb.append("</row>")
     }
-    emitRow(1, df.columns.toSeq)
-    rows.zipWithIndex.foreach { case (r, i) =>
-      emitRow(i + 2, (0 until r.length).map(j => if (r.isNullAt(j)) null else r.get(j)))
-    }
+    emitRow(1, header)
+    rows.zipWithIndex.foreach { case (cells, i) => emitRow(i + 2, cells) }
     sb.append("</sheetData></worksheet>")
     sb.toString
   }

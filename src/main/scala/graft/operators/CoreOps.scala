@@ -74,25 +74,6 @@ object CoreOps {
       .drop("__incoming")
   }
 
-  /** W3: lag-1 percent return over `order` within `part` partitions
-    * (`dashboard.py:196`). First row per partition is null. */
-  def lagReturn(df: DataFrame, part: Seq[Column], order: Seq[Column],
-                value: Column, as: String): DataFrame = {
-    val w = Window.partitionBy(part: _*).orderBy(order: _*)
-    val prev = lag(value, 1).over(w)
-    df.withColumn(as, (value - prev) / prev * 100)
-  }
-
-  /** W4: percent return vs the first value of the ordered partition
-    * (`dashboard.py:198-200`). */
-  def returnFromFirst(df: DataFrame, part: Seq[Column], order: Seq[Column],
-                      value: Column, as: String): DataFrame = {
-    val w = Window.partitionBy(part: _*).orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val init = first(value).over(w)
-    df.withColumn(as, (value - init) / init * 100)
-  }
-
   /** W8: ratio of `value` to the sum of `value` over `part` (whole-frame
     * window; the pie-share at `dashboard.py:122-127`). */
   def ratioToTotal(df: DataFrame, part: Seq[Column], value: Column, as: String): DataFrame = {

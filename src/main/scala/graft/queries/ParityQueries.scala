@@ -579,18 +579,14 @@ object ParityQueries {
     // S9 export alignment: the xlsx Composition-Changes sheet's diff —
     // computed on the REVERSED frame by the reference (dashboard.py:372 →
     // :217), so labels land with +/- inverted against the PREVIOUS date
-    // and the pad '-' on the oldest row (Exports.changesSheet; golden
-    // index_data.xlsx sheet 3). Same plan as q06 with the roles swapped —
-    // the oracle proves the inversion, not just the diff. Not routed
-    // through Exports.changesSheet: its newest-first orderBy would add a
-    // range exchange and a sampling job.
+    // and the pad '-' on the oldest row (Analytics.exportChange, the
+    // column Exports.changesSheet reads; golden index_data.xlsx sheet 3).
+    // Same plan as q06 with the roles swapped — the oracle proves the
+    // inversion, not just the diff.
     Q("q45_changes_export",
       (s, dir) =>
-        CoreOps.lagArrayDiff(
-            paperIndex(s, dir).select(col("date").as("d"), col("composition").as("arr")),
-            Nil, Seq(col("d")), col("arr"))
-          .select(col("d"),
-            CoreOps.changeString(col("removed"), col("added")).as("composition_changes")),
+        Analytics.compositionDiff(paperIndex(s, dir))
+          .select(col("date").as("d"), Analytics.exportChange.as("composition_changes")),
       Some(s"""$dayCompositionSql,
         |w AS (SELECT d, arr, lag(arr) OVER (ORDER BY d) AS prev FROM comp),
         |diff AS (

@@ -124,6 +124,16 @@ class PlanAuditSpec extends SparkSpec {
       "call graft.marketviz.IndexCalculator.computeIndex instead:\n" + offenders.mkString("\n"))
   }
 
+  test("no query writes its own composition diff: the dashboard diffs live in Analytics") {
+    // The dashboard's change strings are columns of graft.marketviz.Analytics;
+    // a lagArrayDiff or changeString in a query is a second copy of one of
+    // them that the benchmark never times.
+    val queries = sources(new java.io.File(mainRoot, "graft/queries"))
+    val offenders = callSites(queries, Seq("lagArrayDiff(", "changeString("))
+    assert(offenders.isEmpty,
+      "project graft.marketviz.Analytics' change columns instead:\n" + offenders.mkString("\n"))
+  }
+
   test("KeyedParquetStore locks and opens write planning in one place; " +
       "src/main reads no spark.graft.store key but debugChecks") {
     // KeyedParquetStore's commit protocol (writer lock → write planning →

@@ -19,9 +19,7 @@ class ReseedSpec extends SparkSpec {
   }
 
   test("reseed preserves every table's schema exactly") {
-    val tables = Seq("region", "nation", "customer", "supplier", "part",
-      "orders", "lineitem", "events", "documents", "embeddings")
-    tables.foreach { t =>
+    Tables.names.foreach { t =>
       val src = spark.read.parquet(s"/root/testdata/sf0.001/$t.parquet").schema
       val got = spark.read.parquet(s"$dst/$t.parquet").schema
       assert(got === src, s"$t schema drifted")

@@ -10,11 +10,8 @@ package graft
   * unit-test speed for BOTH branches. */
 class ScaleUpSpec extends SparkSpec {
 
-  private val tables = Seq("region", "nation", "customer", "supplier",
-    "part", "orders", "lineitem", "events", "documents", "embeddings")
-
   private def schemasEqual(dst: String): Unit =
-    tables.foreach { t =>
+    Tables.names.foreach { t =>
       val src = spark.read.parquet(s"/root/testdata/sf0.001/$t.parquet").schema
       val got = spark.read.parquet(s"$dst/$t.parquet").schema
       assert(got === src, s"$t: scaled schema drifted from the source's")

@@ -51,19 +51,28 @@ class EndToEndSpec extends SparkSpec {
       .select($"Composition Changes").as[String].collect()
     assert(changes.head === "-")
 
-    // S9 file emission: three sheets written and re-read (CSV fallback —
-    // no spreadsheet jar in this build)
-    val outDir = Files.createTempDirectory("sheets").toString
-    SheetWriter.writeAll(index, outDir)
-    val perfBack = spark.read.option("header", "true").csv(s"$outDir/Performance")
-    assert(perfBack.columns.toSeq ===
-      Seq("Date", "Price", "Daily Return (%)", "Cumulative Return (%)"))
-    assert(perfBack.count() === 2)
-    // newest-first row order survives the round trip
-    assert(perfBack.limit(1).select($"Date").as[String].head() === "2024-01-02")
-    assert(spark.read.option("header", "true").csv(s"$outDir/Composition")
-      .columns.toSeq === Seq("Date", "Composition"))
-    assert(spark.read.option("header", "true").csv(s"$outDir/Composition Changes")
-      .columns.toSeq === Seq("Date", "Composition Changes"))
+    // S9 file emission: the three-sheet workbook written and re-read
+    val file = Files.createTempDirectory("sheets").toString + "/index_data.xlsx"
+    SheetWriter.writeXlsx(index, file)
+    val zf = new java.util.zip.ZipFile(file)
+    try {
+      // each sheet's rows, as the text of their cells
+      def sheet(i: Int): Seq[Seq[String]] = {
+        val rows = javax.xml.parsers.DocumentBuilderFactory.newInstance().newDocumentBuilder()
+          .parse(zf.getInputStream(zf.getEntry(s"xl/worksheets/sheet$i.xml")))
+          .getElementsByTagName("row")
+        (0 until rows.getLength).map { r =>
+          val cs = rows.item(r).asInstanceOf[org.w3c.dom.Element].getElementsByTagName("c")
+          (0 until cs.getLength).map(cs.item(_).getTextContent)
+        }
+      }
+      val perfBack = sheet(1)
+      assert(perfBack.head === Seq("Date", "Price", "Daily Return (%)", "Cumulative Return (%)"))
+      assert(perfBack.length === 1 + 2)
+      // newest-first row order survives the round trip
+      assert(perfBack(1).head === "2024-01-02")
+      assert(sheet(2).head === Seq("Date", "Composition"))
+      assert(sheet(3).head === Seq("Date", "Composition Changes"))
+    } finally zf.close()
   }
 }

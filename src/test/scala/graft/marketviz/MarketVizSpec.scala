@@ -202,6 +202,56 @@ class MarketVizSpec extends SparkSpec {
     } finally zf.close()
   }
 
+  test("writeXlsx runs one Spark plan, and each sheet holds its Exports sheet's rows (S9)") {
+    val sheets = Seq(Exports.performanceSheet(index), Exports.compositionSheet(index),
+      Exports.changesSheet(index)).map(_.collect().toSeq)
+    val file = java.nio.file.Files.createTempDirectory("xlsx_one").toString + "/index_data.xlsx"
+    val executions = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          executions.incrementAndGet()
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    // the listener bus is async: drain it so only writeXlsx's events count
+    org.apache.spark.GraftSparkInternals.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      SheetWriter.writeXlsx(index, file)
+      org.apache.spark.GraftSparkInternals.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(executions.get === 1, "SQL executions started by one writeXlsx")
+    val zf = new java.util.zip.ZipFile(file)
+    try sheets.zipWithIndex.foreach { case (want, i) =>
+      val rows = javax.xml.parsers.DocumentBuilderFactory.newInstance().newDocumentBuilder()
+        .parse(zf.getInputStream(zf.getEntry(s"xl/worksheets/sheet${i + 1}.xml")))
+        .getElementsByTagName("row")
+      // every data row's cells by A1 ref; a null cell is omitted
+      val got = (1 until rows.getLength).map { r =>
+        val cs = rows.item(r).asInstanceOf[org.w3c.dom.Element].getElementsByTagName("c")
+        (0 until cs.getLength).map { c =>
+          val e = cs.item(c).asInstanceOf[org.w3c.dom.Element]
+          e.getAttribute("r") -> e.getTextContent
+        }.toMap
+      }
+      val expected = want.zipWithIndex.map { case (row, r) =>
+        (0 until row.length).filterNot(row.isNullAt)
+          .map(j => s"${XlsxWriter.colRef(j)}${r + 2}" -> row.get(j).toString).toMap
+      }
+      assert(got === expected, s"sheet ${i + 1}")
+    } finally zf.close()
+  }
+
+  test("XlsxWriter refuses a data-plane-sized frame as a report sink") {
+    val file = java.nio.file.Files.createTempDirectory("xlsx_big").toString + "/big.xlsx"
+    val ex = intercept[IllegalArgumentException] {
+      XlsxWriter.write(spark.range(XlsxWriter.MaxRows + 1).toDF(), Seq("S" -> Seq("id")), file)
+    }
+    assert(ex.getMessage.contains("xlsx is a report sink"))
+  }
+
   test("XlsxWriter column refs and XML escaping cover the A1 grammar") {
     assert(XlsxWriter.colRef(0) === "A")
     assert(XlsxWriter.colRef(25) === "Z")
@@ -213,8 +263,8 @@ class MarketVizSpec extends SparkSpec {
     assert(XlsxWriter.colRef(702) === "AAA")
     // special characters in cell text survive the zip + DOM round-trip
     val file = java.nio.file.Files.createTempDirectory("xlsx_esc").toString + "/esc.xlsx"
-    XlsxWriter.write(spark,
-      Seq("S" -> Seq(("a<b&c>d", "\"quoted\"")).toDF("x", "y")), file)
+    XlsxWriter.write(Seq(("a<b&c>d", "\"quoted\"")).toDF("x", "y"),
+      Seq("S" -> Seq("x", "y")), file)
     val zf = new java.util.zip.ZipFile(file)
     try {
       val doc = javax.xml.parsers.DocumentBuilderFactory.newInstance().newDocumentBuilder()
@@ -229,9 +279,8 @@ class MarketVizSpec extends SparkSpec {
     // <v>NaN</v> is not a valid SpreadsheetML numeric and makes Excel
     // report a corrupt workbook — non-finite values must land as text
     val file = java.nio.file.Files.createTempDirectory("xlsx_nan").toString + "/nan.xlsx"
-    XlsxWriter.write(spark,
-      Seq("S" -> Seq((Double.NaN, Double.PositiveInfinity, 1.5))
-        .toDF("a", "b", "c")), file)
+    XlsxWriter.write(Seq((Double.NaN, Double.PositiveInfinity, 1.5)).toDF("a", "b", "c"),
+      Seq("S" -> Seq("a", "b", "c")), file)
     val zf = new java.util.zip.ZipFile(file)
     try {
       val doc = javax.xml.parsers.DocumentBuilderFactory.newInstance().newDocumentBuilder()

@@ -22,22 +22,6 @@ class CoreOpsSpec extends SparkSpec {
     assert(got.toSeq === Seq("new", "keep"))
   }
 
-  test("lagReturn: first row null, then (v - prev)/prev*100") {
-    val df = Seq((1, 100.0), (2, 110.0), (3, 99.0)).toDF("i", "v")
-    val got = CoreOps.lagReturn(df, Nil, Seq($"i"), $"v", "r")
-      .orderBy($"i").select($"r").as[Option[Double]].collect()
-    assert(got(0).isEmpty)
-    assert(math.abs(got(1).get - 10.0) < 1e-12)
-    assert(math.abs(got(2).get - (-10.0)) < 1e-12)
-  }
-
-  test("returnFromFirst measures vs the window's first row") {
-    val df = Seq((1, 50.0), (2, 75.0), (3, 25.0)).toDF("i", "v")
-    val got = CoreOps.returnFromFirst(df, Nil, Seq($"i"), $"v", "c")
-      .orderBy($"i").select($"c").as[Double].collect()
-    assert(got.toSeq === Seq(0.0, 50.0, -50.0))
-  }
-
   test("ratioToTotal sums to 1 within a partition") {
     val df = Seq(("g", 1.0), ("g", 3.0)).toDF("k", "v")
     val got = CoreOps.ratioToTotal(df, Seq($"k"), $"v", "share")

@@ -1004,8 +1004,7 @@ class SourcesSpec extends SparkSpec {
     // Perturbed snapshot: symlink the 9 healthy tables, replace events
     // with a cross-family ts (string) — the drift the reader cannot absorb.
     val dir = Files.createTempDirectory("drift").toString
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "documents", "embeddings").foreach { t =>
+    graft.Tables.names.filterNot(_ == "events").foreach { t =>
       Files.createSymbolicLink(
         java.nio.file.Paths.get(s"$dir/$t.parquet"),
         java.nio.file.Paths.get(s"/root/testdata/sf0.001/$t.parquet"))
