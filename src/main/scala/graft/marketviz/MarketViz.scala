@@ -118,12 +118,17 @@ object Analytics {
   private val prevValue = lag(value, 1).over(byDate)
   private def percentFrom(base: Column): Column = (value - base) / base * 100
 
-  /** W3 (`dashboard.py:196`): null on the first date. */
-  private[marketviz] val dailyReturn: Column = percentFrom(prevValue)
-
-  /** W4 (`dashboard.py:198-200`). */
-  private[marketviz] val cumulativeReturn: Column = percentFrom(
-    first(value).over(byDate.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+  /** W3+W4 (`dashboard.py:193-201`): daily and cumulative percent
+    * returns, the daily one null on the first date. Each window value is
+    * a column of its own that its return reads twice: written inline, the
+    * analyzer would give each occurrence its own window expression and
+    * compute the lag and the first value twice a row. */
+  def summaryMetrics(indexData: DataFrame): DataFrame =
+    indexData.select(col("*"), prevValue.as("__prev"), first(value).over(
+        byDate.rowsBetween(Window.unboundedPreceding, Window.currentRow)).as("__first"))
+      .withColumn("daily_return", percentFrom(col("__prev")))
+      .withColumn("cumulative_return", percentFrom(col("__first")))
+      .drop("__prev", "__first")
 
   /** W6/W7: adds the previous date's composition (`prev`) and the
     * order-preserving diff against it (`added`, `removed`). */
@@ -133,11 +138,6 @@ object Analytics {
   /** The export sheet's change string over [[compositionDiff]]: W7's with
     * the added/removed roles swapped ([[Exports]] says why). */
   private[graft] val exportChange: Column = CoreOps.changeString(col("removed"), col("added"))
-
-  /** W3+W4 (`dashboard.py:193-201`): daily and cumulative percent returns. */
-  def summaryMetrics(indexData: DataFrame): DataFrame =
-    indexData.withColumn("daily_return", dailyReturn)
-      .withColumn("cumulative_return", cumulativeReturn)
 
   /** The headline stat tiles (`dashboard.py:146-156`): latest index value,
     * absolute daily change, percent daily return — last two rows of the
@@ -231,10 +231,10 @@ object Exports {
 
   /** Every sheet's columns in one newest-first frame. */
   private[marketviz] def workbook(indexData: DataFrame): DataFrame =
-    Analytics.compositionDiff(indexData)
+    Analytics.summaryMetrics(Analytics.compositionDiff(indexData))
       .select(col("date").as("Date"), col("index_value").as("Price"),
-        Analytics.dailyReturn.as("Daily Return (%)"),
-        Analytics.cumulativeReturn.as("Cumulative Return (%)"),
+        col("daily_return").as("Daily Return (%)"),
+        col("cumulative_return").as("Cumulative Return (%)"),
         array_join(col("composition"), ",").as("Composition"),
         Analytics.exportChange.as("Composition Changes"))
       .orderBy(col("Date").desc)

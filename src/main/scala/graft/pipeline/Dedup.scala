@@ -367,7 +367,9 @@ object Dedup {
     * and the minhash merge runs three times. The pruning join carries
     * id-width pairs against the (usually driver-local, broadcast) label
     * relation; shingle-bearing work — exactJaccard — happens only on the
-    * chain and the surviving cross-component candidates. */
+    * chain and the surviving cross-component candidates.
+    *
+    * Caller: q81's chain, [[Curation.full]]. */
   def confirmedPairsForClustering(sigs: DataFrame, sh: DataFrame,
                                   threshold: Double): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -400,7 +402,8 @@ object Dedup {
 
   /** Identical-class collapse — step 1 of the r19 scale fix shared by
     * every banded near-dup face (the minhash, simhash and cosine pair
-    * faces, the curation chain, both incremental near-dup indexes).
+    * faces, both incremental near-dup indexes). The curation chains
+    * ([[Curation]]) drop identical copies by [[exact]] election instead.
     * Identical inputs have identical signatures, so a K-copy class
     * collides with itself in EVERY band/table and a bucket self-join
     * emits C(K,2) candidate pairs — ~10¹⁸ at a 30% boilerplate cluster
@@ -444,9 +447,8 @@ object Dedup {
     classMembers(ids, "doc_id", "__ch", classReps(ids, "doc_id", "__ch"))
   }
 
-  /** The collapsed minhash-LSH core shared by [[minhashLsh]],
-    * [[nearDupLabels]] and the curation chain behind q90/q91/q92/q96
-    * (`PipelineQueries.curationKept`): identical-class collapse, then
+  /** The collapsed minhash-LSH core shared by [[minhashLsh]] and
+    * [[nearDupLabels]]: identical-class collapse, then
     * shingle → minhash → banded candidates → exact-Jaccard confirm over
     * ONE representative per class. Returns (members, rep shingle relation, confirmed rep
     * pairs at `threshold`) — candidate and confirm work is
@@ -500,8 +502,8 @@ object Dedup {
       .select(col(id), col("label"))
   }
 
-  /** The text family's label expansion ([[nearDupLabels]], the curation
-    * chain, [[IncrementalDedup]]'s in-batch closure): its cliques are the
+  /** The text family's label expansion ([[nearDupLabels]],
+    * [[IncrementalDedup]]'s in-batch closure): its cliques are the
     * multi-member classes with ≥ 1 shingle — classes without shingles
     * (< shingleN tokens, or null text) never signed a band and never
     * pair, exactly the pre-collapse verdict — and only while a Jaccard

@@ -1,9 +1,9 @@
 package graft.queries
 
 import graft.Tables
-import graft.pipeline.{Dedup, Multimodal, Sampling, Similarity, TextAnalysis}
+import graft.pipeline.{Curation, Dedup, Multimodal, Sampling, Similarity, TextAnalysis}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Beyond-parity operators (BASELINE.json north star): dedup, similarity
   * search, text analysis, multimodal plumbing — the training-data-pipeline
@@ -2006,39 +2006,19 @@ object PipelineQueries {
     // run actually chains — quality gate → exact dedup → test-set
     // decontamination → token-budget selection — composed from the SAME
     // operators their per-stage faces verify individually (q34, q20,
-    // q51, q74), so this row proves the stages COMPOSE: each stage's
-    // output schema feeds the next with no adapters, and the combined
-    // plan stays scale-shaped end to end (quality features per-row and
-    // shuffle-free; the dedup election shuffles (hash, id) pairs, never
-    // bodies, with the one body-width exchange being the id-keyed semi
-    // join that applies it — the q40 keepCanonical shape; eval shingles
-    // broadcast; the budget stage runs on takeTokenBudget's pinned
-    // id+16-byte projection). Docs 0-19 stand in for the eval benchmark
-    // (as q51); the pool is the rest. Output = the selected corpus with
-    // its budget bookkeeping, deterministic by the (score, doc_id)
-    // total order.
+    // q51, q74), so this row proves the stages COMPOSE. The gate, the
+    // eval split and the exact election are Curation's front (the one
+    // copy q81 and the curation-v2 family share); eval shingles
+    // broadcast; the budget stage runs on the gate's pinned features.
+    // Output = the selected corpus with its budget bookkeeping,
+    // deterministic by the (score, doc_id) total order.
     Q("q80_curation_pipeline",
       (s, dir) => {
-        val all = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        val evalDocs = all.filter(col("doc_id") < 20)
-        val pool = all.filter(col("doc_id") >= 20)
-        // Tokenize the pool exactly ONCE: the quality features are
-        // consumed by three downstream stages, so pin the id+16-byte
-        // projection (the takeTokenBudget pin pattern) and rejoin text
-        // from the raw scan — a parquet re-scan is cheap where a per-
-        // consumer re-tokenization is not (first cut consumed the
-        // feature relation unpinned and ran 5.8 s at sf0.1; this shape
-        // runs ~2.5 s, and at 100 TB the gap is a full corpus pass).
-        val feats = graft.Pin.ser(TextAnalysis.qualityFilter(pool,
-          minTokens = 40, maxStopwordRatio = 0.2, maxShortTokenRatio = 0.3)
-          .select(col("doc_id"), col("n_tokens"), col("stopword_ratio")))
-        val qualityText = pool.join(
-          feats.select(col("doc_id")), Seq("doc_id"), "left_semi")
-        val canon = Dedup.exact(qualityText)
-        val uniqueText = qualityText.join(
-          canon.select(col("kept_id").as("doc_id")), Seq("doc_id"), "left_semi")
-        val cleanText = Dedup.decontaminate(uniqueText, evalDocs,
-          shingleN = 3, minOverlap = 10)
+        val (evalDocs, pool) = Curation.evalSplit(
+          Tables.documents(s, dir).select(col("doc_id"), col("text")))
+        val (feats, qualityText) = Curation.qualityGate(pool)
+        val cleanText = Dedup.decontaminate(Curation.exactUnique(qualityText),
+          evalDocs, shingleN = 3, minOverlap = 10)
         val cleanFeats = feats.join(
           cleanText.select(col("doc_id")), Seq("doc_id"), "left_semi")
         Sampling.takeTokenBudget(cleanFeats, "doc_id",
@@ -2088,85 +2068,19 @@ object PipelineQueries {
         |SELECT doc_id, n_tokens, cum_before FROM o WHERE cum_before < 20000""".stripMargin)),
 
     // FULL-CHAIN corpus curation (r12 verdict item 1): q80's four stages
-    // plus the three a production run also chains — fuzzy near-dup dedup
-    // (the q25/q37/q40 minhashLsh→dedupClusters→apply shape), PII
-    // redaction (q64), and output chunking (q57) — all composed from the
-    // SAME operators their per-stage faces verify individually. PII is
-    // INJECTED at the source (q64's shape — the corpus has none), so a
-    // silently no-op redaction surfaces verbatim in chunk_text and
-    // hash-fails. The one-tokenization-pass discipline (q80's pin
-    // lesson) extends to SHINGLES here: the hashed-shingle relation pins
-    // ONCE and feeds all three of its consumers — band signatures, the
-    // Jaccard confirm, and eval decontamination — where calling
-    // minhashLsh + decontaminate as black boxes would shingle the
-    // surviving corpus twice more (each an extra full-corpus pass at
-    // 100 TB). Stages between the gates carry ids + narrow features
-    // only; text rejoins from the raw scan exactly where a stage needs
-    // it (the exact-dedup hash scan; the final redact+chunk of the
-    // budget-selected docs). Output is the training-ready chunk
-    // relation, deterministic by (doc_id, chunk_id).
+    // plus the three a production run also chains — fuzzy near-dup dedup,
+    // PII redaction (q64) and output chunking (q57) — as Curation.full.
+    // PII is INJECTED at the source (q64's shape — the corpus has none),
+    // so a silently no-op redaction surfaces verbatim in chunk_text and
+    // hash-fails.
     Q("q81_curation_full",
       (s, dir) => {
-        val raw = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        val evalDocs = raw.filter(col("doc_id") < 20)
-        val pool = raw.filter(col("doc_id") >= 20)
-          .select(col("doc_id"), concat(col("text"),
-            lit(" contact user"), col("doc_id").cast("string"),
-            lit("@example.com at 10.0."), (col("doc_id") % 256).cast("string"),
-            lit(".7 ref 99887766"), col("doc_id").cast("string")).as("text"))
-        // Stage 1 — quality gate (q34 params); the id+16-byte feature
-        // projection pins once and serves stages 1 and 6.
-        val feats = graft.Pin.ser(TextAnalysis.qualityFilter(pool,
-          minTokens = 40, maxStopwordRatio = 0.2, maxShortTokenRatio = 0.3)
-          .select(col("doc_id"), col("n_tokens"), col("stopword_ratio")))
-        val qualityText = pool.join(
-          feats.select(col("doc_id")), Seq("doc_id"), "left_semi")
-        // Stage 2 — exact dedup election + application (q20/q40 shape).
-        val uniqueText = qualityText.join(
-          Dedup.exact(qualityText).select(col("kept_id").as("doc_id")),
-          Seq("doc_id"), "left_semi")
-        // Stage 3 — fuzzy near-dup (q25/q37/q40 shape). The pinned
-        // shingle relation is this stage's substrate AND stage 4's.
-        //
-        // r20: component-aware candidate pruning
-        // (Dedup.confirmedPairsForClustering). This chain's exact dedup
-        // (stage 2) covers identical texts, but the injected per-doc PII
-        // suffixes make the dupheavy boilerplate cluster K DISTINCT
-        // texts at Jaccard ≈ 0.97 — identical-class collapse is a no-op
-        // and the pair-grain confirm measured C(K,2): 225.3 s at
-        // dupheavy sf0.1 (r19 evidence). The confirmed pairs feed ONLY
-        // dedupClusters → dropNonCanonical, so only their CONNECTED
-        // COMPONENTS matter: confirm a spanning chain first, then only
-        // cross-component candidates — labels (and every downstream
-        // byte) provably unchanged; confirm work drops to ≈ K.
-        val sh = graft.Pin.ser(TextAnalysis.hashedShingles(uniqueText, 3))
-        val sigs = Dedup.bandSigs(sh, numHashes = 16, rowsPerBand = 4)
-        val clusterPairs = Dedup.confirmedPairsForClustering(
-          sigs, sh, threshold = 0.5)
-        val nearIds = Dedup.dropNonCanonical(
-          uniqueText.select(col("doc_id")),
-          Dedup.dedupClusters(clusterPairs))
-        // Stage 4 — eval decontamination (q51 params) on the SAME pinned
-        // shingles, through the shingle-level library face (r14): the
-        // one-pass discipline no longer requires inlining the stage body.
-        val hits = Dedup.contaminatedExact(
-          sh.join(nearIds, Seq("doc_id"), "left_semi"),
-          TextAnalysis.hashedShingles(evalDocs, 3), minOverlap = 10)
-        val cleanIds = nearIds.join(hits, Seq("doc_id"), "left_anti")
-        // Stage 5 — token-budget selection (q74 shape) over the pinned
-        // features; no re-tokenization.
-        val selected = Sampling.takeTokenBudget(
-          feats.join(cleanIds, Seq("doc_id"), "left_semi"),
-          "doc_id", col("stopword_ratio"), col("n_tokens"), budget = 20000L)
-        // Stages 6+7 — PII redact (q64 stages) then chunk (q57 params),
-        // on the budget-selected docs only; text rejoins from the scan.
-        val selText = pool.join(
-          selected.select(col("doc_id")), Seq("doc_id"), "left_semi")
-        val redactedCol = TextAnalysis.redactPii(col("text"))
-          .collectFirst { case ("redacted", c) => c }.get
-        TextAnalysis.chunkDocuments(
-          selText.select(col("doc_id"), redactedCol.as("text")),
-          maxTokens = 32, overlap = 8)
+        val (evalDocs, pool) = Curation.evalSplit(
+          Tables.documents(s, dir).select(col("doc_id"), col("text")))
+        Curation.full(evalDocs, pool.select(col("doc_id"), concat(col("text"),
+          lit(" contact user"), col("doc_id").cast("string"),
+          lit("@example.com at 10.0."), (col("doc_id") % 256).cast("string"),
+          lit(".7 ref 99887766"), col("doc_id").cast("string")).as("text")))
       },
       Some(s"""WITH RECURSIVE w AS (
         |  SELECT doc_id,
@@ -2626,17 +2540,15 @@ object PipelineQueries {
         |FROM (SELECT DISTINCT doc_id AS eval_id FROM ehsh) e
         |LEFT JOIN per p USING (eval_id)""".stripMargin)),
 
-    // Curation chain v2 — this round's faces composed end to end:
-    // quality gate → near-dup clusters → BEST-member election
-    // (keepBestPerCluster: the longest doc survives, subsuming exact
-    // dedup — an exact dup pair is a Jaccard-1.0 cluster and the
-    // election keeps one) → CONTAINMENT decontamination → temperature
-    // mixture. ONE corpus shingle pass (the q81 pin discipline) feeds
-    // banding, the Jaccard confirm, AND the containment stage — through
-    // the public shingle-level faces, no inlined stage bodies. Stages
-    // carry ids + narrow features; text never re-tokenizes.
+    // Curation chain v2 (Curation.mixture): q81's front (quality gate →
+    // exact election → one pinned shingle pass) → near-dup clusters over
+    // the unique texts → BEST-member election (keepBestPerCluster: the
+    // longest doc survives) → CONTAINMENT decontamination on the same
+    // shingles → temperature mixture. The oracle models no exact stage:
+    // there an exact-dup pair is a Jaccard-1.0 cluster whose min id wins
+    // the election, the copy exact dedup keeps.
     Q("q90_curation_quality",
-      (s, dir) => curationV2(s, dir)._1,
+      (s, dir) => Curation.mixture(Tables.documents(s, dir))._1,
       Some(s"""$curationV2Sql
         |SELECT doc_id, lang FROM mix90""".stripMargin)),
 
@@ -2654,7 +2566,7 @@ object PipelineQueries {
     // rank and pack of every copy.
     Q("q91_training_order",
       (s, dir) => {
-        val (mixed, feats) = curationV2(s, dir)
+        val (mixed, feats) = Curation.mixture(Tables.documents(s, dir))
         val docs = mixed.select(col("doc_id")).join(feats, Seq("doc_id"))
         val w = least(col("n_tokens").cast("double") / lit(80.0), lit(3.0))
         val rep = Sampling.repeatByWeight(docs, "doc_id", w,
@@ -2709,10 +2621,10 @@ object PipelineQueries {
     // matters: reusing epoch 1's salt would replay the same relative
     // order and the anneal pass would see documents in correlated
     // positions across epochs. Composed entirely from public faces over
-    // the SHARED curationV2 relations — one curation chain, two ranks.
+    // the SHARED Curation.mixture relations — one curation chain, two ranks.
     Q("q92_curriculum_order",
       (s, dir) => {
-        val (mixed, feats) = curationV2(s, dir)
+        val (mixed, feats) = Curation.mixture(Tables.documents(s, dir))
         val docs = graft.Pin.ser(
           mixed.select(col("doc_id")).join(feats, Seq("doc_id")))
         val ep1 = Sampling.deterministicShuffleRank(docs, Seq("doc_id"),
@@ -2991,8 +2903,9 @@ object PipelineQueries {
         |LEFT JOIN noncanon1 nc ON nc.doc_id = b1.doc_id""".stripMargin)),
 
     // Curation v3 — SURGICAL decontamination inside the chain: stages
-    // 1-3 shared with q90 (quality gate -> one pinned shingle pass ->
-    // near-dup election), then q93's chunk-grain ∩/|chunk| decision
+    // 1-3 shared with q90 (Curation.kept: quality gate -> exact election
+    // -> one pinned shingle pass -> near-dup election), then q93's
+    // chunk-grain ∩/|chunk| decision
     // replaces the doc-burning containment stage and the surviving
     // chunks re-pack into 2048-token training rows (q91's pack shape:
     // composite-key deal, bucket-partitioned window, no global sort).
@@ -3002,7 +2915,7 @@ object PipelineQueries {
     // the numbers; the planted-corpus divergence proof is in
     // PipelineEndToEndSpec's q96 case).
     Q("q96_curation_surgical",
-      (s, dir) => curationV3(s, dir),
+      (s, dir) => Curation.surgical(Tables.documents(s, dir)),
       Some(s"""$curationKeptSql,
         |kt96 AS MATERIALIZED (
         |  SELECT q.doc_id, q.text FROM q JOIN kept USING (doc_id)
@@ -3394,63 +3307,6 @@ object PipelineQueries {
         |FROM n LEFT JOIN k USING (doc_id)""".stripMargin))
   )
 
-  /** The curation-v2 chain (q90), factored so the q91 training-order
-    * face composes over the IDENTICAL survivors: quality gate → one
-    * pinned shingle pass → banded near-dup candidates → Jaccard confirm
-    * → cluster election (longest member) → containment decontamination
-    * → temperature mixture. Returns (mixture survivors `(doc_id, lang)`,
-    * quality features `(doc_id, n_tokens)`) — q90 publishes the first;
-    * q91 joins the second back for epoch weights. */
-  /** Stages 1–3 of the curation chain — quality gate, ONE pinned shingle
-    * pass, banded near-dup candidates → Jaccard confirm → cluster
-    * election (longest member) — shared by curation v2 (doc-grain
-    * decontamination, q90/q91/q92) and v3 (chunk-grain surgical
-    * decontamination, q96), so the two chains diverge ONLY at the
-    * decontamination stage and the tokens-saved comparison is
-    * apples-to-apples. Returns (pool, evalDocs, feats, sh, keptIds). */
-  private def curationKept(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val docs = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"), col("lang"))
-    val evalDocs = docs.filter(col("doc_id") < 20)
-      .select(col("doc_id"), col("text"))
-    val pool = docs.filter(col("doc_id") >= 20)
-    // Stage 1 — quality gate (q34 params); pinned id+feature
-    // projection serves the gate and the election score.
-    val feats = graft.Pin.ser(TextAnalysis.qualityFilter(
-      pool.select(col("doc_id"), col("text")),
-      minTokens = 40, maxStopwordRatio = 0.2, maxShortTokenRatio = 0.3)
-      .select(col("doc_id"), col("n_tokens")))
-    val qualityText = pool.select(col("doc_id"), col("text"))
-      .join(feats.select(col("doc_id")), Seq("doc_id"), "left_semi")
-    // Stage 2 — the collapsed near-dup core, Dedup.collapsedRepPairs.
-    val threshold = 0.5
-    val (members, sh, pairs) =
-      Dedup.collapsedRepPairs(qualityText, 16, 4, 3, threshold)
-    val labels = Dedup.expandMemberLabels(members, sh,
-      pairs.select(col("doc_a"), col("doc_b")), threshold)
-    // Stage 3 — quality-aware election: the LONGEST cluster member.
-    // The winner is always a rep (a non-rep ties its own rep on
-    // n_tokens — identical text — and loses the id tie-break), so the
-    // rep-grain `sh` below still holds every kept doc's shingles: the
-    // stage-4 `sh ⋉ keptIds` semi-join is unchanged and exact.
-    //
-    // Pinned (r19): keptIds is id-width and consumed by EVERY downstream
-    // stage of both chains (v2: the decon semi-join, the clean-set anti
-    // join, the mixture semi-join; v3: keptText), and its derivation is
-    // no longer cheap to replay — pre-collapse the cluster labels were a
-    // driver-local relation (dedupClusters' ≤1M-edge union-find path),
-    // so re-deriving keptIds per consumer cost two joins over pins;
-    // post-collapse the label expansion is a distributed join chain over
-    // the members/sh pins, and the first full31 bench measured each
-    // consumer replaying it (q90 jobs 42 → 73, q92 task_ms 10.9 s →
-    // 26.2 s). One checkpoint restores single-execution.
-    val keptIds = graft.Pin.ser(
-      Dedup.keepBestPerCluster(feats, labels, col("n_tokens"))
-        .select(col("doc_id")))
-    (pool, evalDocs, feats, sh, keptIds)
-  }
-
   /** The planted "benchmark" of the embedded-eval queries (q84, q85,
     * q89): train docs 100–119 re-keyed to eval ids 0–19, each TRUNCATED
     * to all but its last 10 tokens (at least 3 kept, so every eval doc
@@ -3461,84 +3317,6 @@ object PipelineQueries {
       .select((col("doc_id") - 100).as("doc_id"),
         array_join(slice(toks, lit(1), greatest(size(toks) - 10, lit(3))), " ")
           .as("text"))
-  }
-
-  private def curationV2(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val (pool, evalDocs, feats, sh, keptIds) = curationKept(s, dir)
-    // Stage 4 — containment decontamination on the SAME shingles.
-    val cleanIds = keptIds.join(
-      Dedup.contaminatedByContainment(
-        sh.join(keptIds, Seq("doc_id"), "left_semi"),
-        TextAnalysis.hashedShingles(evalDocs, 3), minContainment = 0.5),
-      Seq("doc_id"), "left_anti")
-    // Stage 5 — temperature mixture over the surviving languages.
-    val mixed = Sampling.temperatureMixture(
-      pool.select(col("doc_id"), col("lang"))
-        .join(cleanIds, Seq("doc_id"), "left_semi"),
-      "doc_id", col("lang"), targetRows = 120, alpha = 0.5, salt = "q90")
-    (mixed, feats)
-  }
-
-  /** Curation v3 — the SURGICAL chain: stages 1–3 shared with v2, then
-    * chunk-grain decontamination (q93's transposed ∩/|chunk| ratio over
-    * q57-shape chunks) in place of v2's doc-burning containment stage,
-    * and the surviving chunks re-packed into 2048-token training rows.
-    * A doc with one embedded benchmark string loses THAT chunk and
-    * keeps the rest — v2 burns all of it; conversely a chunk that IS
-    * mostly benchmark text drops even when the doc-grain eval-side
-    * ratio never fires. Both passes are [[Dedup.contaminatedChunks]];
-    * chunks too short to shingle (< 3 tokens) can never be
-    * contaminated and survive by contract.
-    *
-    * BRIDGE WINDOWS (r17, closing the r16 straddle miss): an implant
-    * straddling a 64-token chunk boundary can leave BOTH halves under
-    * the 0.5 chunk ratio — the honest recall gap BENCH_NOTES_r16
-    * quantified. The decision pass therefore also scores the odd
-    * stride-32 windows of `chunkDocuments(…, 64, overlap = 32)`
-    * ([[Dedup.bridgeBurn]]) — each covers `[64j+32, 64j+96)`, centered
-    * on boundary j|j+1. When the halves both fall under the chunk
-    * threshold the implant lies entirely inside that bridge (each half
-    * < 32 tokens), so any
-    * implant ≥ ~33 tokens fires it; a fired bridge burns BOTH adjacent
-    * base chunks (conservative by design — the surgical budget is the
-    * chunk grain, not half-chunks). Implants under ~33 tokens are below
-    * half of ANY 64-token window — the inherent fixed-grain floor, left
-    * to the doc-grain sweeps (q51/q84/q85). Packing stays on the
-    * non-overlapping base chunks: bridges only ever DECIDE, never emit
-    * training rows, so no text duplicates. Cost: one more scan-stage
-    * chunk+shingle pass over the kept docs and one more broadcast decon
-    * join — the 2× shingle cost the r16 notes predicted.
-    *
-    * Shuffle profile: chunking and chunk-shingles
-    * are scan-stage per-row compute over the KEPT docs only; the
-    * decon join broadcasts the eval shingles; the pack is one bucket
-    * exchange — no stage touches rejected docs' bodies. */
-  private def curationV3(s: SparkSession, dir: String): DataFrame = {
-    val (pool, evalDocs, _, _, keptIds) = curationKept(s, dir)
-    // Pinned (r18, the r17 verdict's deferred note): keptText feeds BOTH
-    // the base-chunk pass and the bridge pass below — unpinned, the
-    // second consumer re-executed the whole stages-1–3 chain (quality
-    // gate, shingles, banding, Jaccard, election) just to re-derive the
-    // survivors' text.
-    val keptText = graft.Pin.ser(pool.select(col("doc_id"), col("text"))
-      .join(keptIds, Seq("doc_id"), "left_semi"))
-    val chunks = graft.Pin.ser(
-      TextAnalysis.chunkDocuments(keptText, maxTokens = 64, overlap = 0))
-    val esh = TextAnalysis.hashedShingles(evalDocs, 3)
-    val bad = Dedup.contaminatedChunks(chunks, esh, 3, 0.5)
-    // Bridge decisions: odd stride-32 windows at the same ratio; a fired
-    // bridge burns both base chunks it straddles.
-    val badBridge = Dedup.bridgeBurn(keptText, 64, "doc_id", "chunk_id")(
-      Dedup.contaminatedChunks(_, esh, 3, 0.5))
-    val surviving = chunks
-      .join(bad.unionByName(badBridge).distinct(), Seq("doc_id", "chunk_id"),
-        "left_anti")
-      .select(col("doc_id"), col("chunk_id"), col("n_chunk_tokens"))
-    Sampling.packBudget(surviving, Seq("doc_id", "chunk_id"),
-        col("n_chunk_tokens"), budget = 2048, packBuckets = 16,
-        salt = "q96pack")
-      .select(col("doc_id"), col("chunk_id"), col("n_chunk_tokens"),
-        col("pack_bucket"), col("pack_id"))
   }
 
   /** Shared CTE prefix of the curation oracles — stages 1–3 (quality

@@ -134,6 +134,20 @@ class PlanAuditSpec extends SparkSpec {
       "project graft.marketviz.Analytics' change columns instead:\n" + offenders.mkString("\n"))
   }
 
+  test("the curation front lives in Curation: no query pins its own quality " +
+      "gate or calls a near-dup confirm core") {
+    // The curation chains' quality gate, exact election and shingle pass
+    // are written once, in graft.pipeline.Curation; a pinned qualityFilter
+    // or a collapse/confirm core in a query is a second copy of the chain
+    // that the benchmark never times. q34's unpinned qualityFilter face
+    // and the per-stage Dedup.exact faces stay legal.
+    val queries = sources(new java.io.File(mainRoot, "graft/queries"))
+    val offenders = callSites(queries, Seq("Pin.ser(TextAnalysis.qualityFilter(",
+      "collapsedRepPairs(", "confirmedPairsForClustering("))
+    assert(offenders.isEmpty,
+      "compose graft.pipeline.Curation's stages instead:\n" + offenders.mkString("\n"))
+  }
+
   test("KeyedParquetStore locks and opens write planning in one place; " +
       "src/main reads no spark.graft.store key but debugChecks") {
     // KeyedParquetStore's commit protocol (writer lock → write planning →

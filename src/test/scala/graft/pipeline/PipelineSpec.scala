@@ -222,8 +222,10 @@ class DedupSpec extends SparkSpec {
   test("curation-chain collapse (r19): rep-grain band chain + " +
       "expandMemberLabels reproduces the uncollapsed inline chain's " +
       "labels, and the longest-member election always picks a rep") {
-    // The q90/q91/q92/q96 curationKept rewrite's two proof obligations,
-    // at unit grain: (1) labels from the collapsed chain are byte-equal
+    // The r19 collapse's two proof obligations, at unit grain (the
+    // curation chains now drop identical copies by exact election
+    // instead; the Curation.kept case below plants that election): (1)
+    // labels from the collapsed chain are byte-equal
     // to the uncollapsed shingle→band→candidate→Jaccard→dedupClusters
     // chain; (2) keepBestPerCluster's winner is always a rep (a non-rep
     // ties its own rep on any text-derived score and loses the id
@@ -246,7 +248,7 @@ class DedupSpec extends SparkSpec {
       Dedup.exactJaccard(candsAll, shAll).filter($"jaccard" >= 0.5)
         .select($"doc_a", $"doc_b"))
       .as[(Long, Long)].collect().toSet
-    // collapsed chain: the curationKept stage-2 shape
+    // collapsed chain: identical-class collapse, rep-grain bands
     val members = Dedup.identicalClasses(corpus)
     val repText = corpus.join(
       members.filter($"doc_id" === $"rep").select($"doc_id"),
@@ -275,6 +277,45 @@ class DedupSpec extends SparkSpec {
       .select($"rep").as[Long].collect().toSet
     assert(kept.subsetOf(repSet), s"kept $kept must be reps $repSet")
     assert(kept === Set(100L, 20L, 30L))
+  }
+
+  test("curation v2/v3 election (Curation.kept): exact election, then the " +
+      "longest member of each near-dup cluster, keeps the planted winners " +
+      "and equals electing over every gated doc") {
+    // Gated docs need ≥ 40 tokens with few stopwords and short tokens.
+    def words(prefix: String, n: Int) = (1 to n).map(j => s"$prefix$j").mkString(" ")
+    val long = words("lng", 60)
+    val corpus = (
+      Seq(
+        (5L, long),                                   // eval copy of 30: never in the pool
+        (21L, words("lng", 56)), (22L, words("lng", 56)), (23L, words("lng", 56)),
+        (30L, long),                                  // the longer near-dup wins over the copies
+        (40L, words("iso", 45)), (41L, words("iso", 45)), (42L, words("iso", 45)),
+        (70L, words("tie", 50) + " alt70"), (71L, words("tie", 50) + " alt71"),
+        (80L, words("one", 42)),                      // unique, unclustered
+        (90L, "too short to pass the gate")) ++
+      // K distinct near-identical texts (the q81 regime); 55 is longest
+      (50L to 59L).map(i => (i, words("kcl", 60) + s" usr$i ext$i" +
+        (if (i == 55L) s" more$i extra$i" else "")))
+      ).toDF("doc_id", "text").withColumn("lang", lit("en"))
+    val kept = Curation.kept(corpus)
+    val got = kept.ids.as[Long].collect().toSet
+    assert(got === Set(30L, 40L, 55L, 70L, 80L))
+    // the oracle's model: no exact stage, every gated doc banded and
+    // elected — non-min-id copies pair at Jaccard 1.0 and lose the tie
+    val gated = TextAnalysis.qualityFilter(corpus.filter($"doc_id" >= 20),
+      minTokens = 40, maxStopwordRatio = 0.2, maxShortTokenRatio = 0.3)
+    val sh = TextAnalysis.hashedShingles(gated.select($"doc_id", $"text"), 3)
+    val pairs = Dedup.exactJaccard(
+      graft.operators.CoreOps.bucketPairs(Dedup.bandSigs(sh, 16, 4), Seq("band", "sig"), "doc_id"),
+      sh).filter($"jaccard" >= 0.5)
+    val reference = Dedup.keepBestPerCluster(gated,
+        Dedup.dedupClusters(pairs.select($"doc_a", $"doc_b")), $"n_tokens")
+      .select($"doc_id").as[Long].collect().toSet
+    assert(reference === got)
+    // the shingles cover exactly the unique texts the election saw
+    assert(kept.sh.select($"doc_id").distinct().as[Long].collect().toSet ===
+      Set(21L, 30L, 40L, 70L, 71L, 80L) ++ (50L to 59L))
   }
 
   test("component-aware candidate pruning (r20): confirmedPairsForClustering " +

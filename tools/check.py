@@ -10,9 +10,6 @@ import json, os, sys, glob
 import duckdb
 import pandas as pd
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
-
 
 def table_path(sf_dir: str, t: str) -> str:
     """A table is a single parquet file in the driver's testdata, but a
@@ -20,6 +17,13 @@ def table_path(sf_dir: str, t: str) -> str:
     corpus) — glob the parts in that case."""
     p = f"{sf_dir}/{t}.parquet"
     return f"{p}/*.parquet" if os.path.isdir(p) else p
+
+
+def tables(sf_dir: str) -> list:
+    """Every `<name>.parquet` entry of the corpus directory, file or
+    directory alike."""
+    return sorted(e[:-len(".parquet")] for e in os.listdir(sf_dir)
+                  if e.endswith(".parquet"))
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -32,7 +36,7 @@ def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
     con = duckdb.connect()
-    for t in TABLES:
+    for t in tables(sf_dir):
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
